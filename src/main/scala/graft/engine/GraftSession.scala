@@ -34,6 +34,16 @@ object GraftSession {
       // per-partition build sides bounded; small-SF plans are unaffected
       // (dims broadcast long before either strategy is consulted).
       .config("spark.sql.join.preferSortMergeJoin", "false")
+      // List up to 4096 sub-directories on the driver instead of launching
+      // a one-task-per-directory Spark listing job (default threshold 32).
+      // An IVF `vectors/cluster=N` tree has one directory per list, so at
+      // the default every GRAFT_ANN_TOPK, filtered serve and ALTER INDEX …
+      // APPEND over a >32-list index paid that job. Measured on a 4-core
+      // host with local disk, `spark.read.parquet` of a 142-list, 710-file
+      // vectors tree: median 663 ms as a job, 130 ms on the driver (10
+      // alternating reads each). Trees past 4096 directories still fan out,
+      // where parallel listing pays for its scheduling.
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
       // events.parquet carries TIMESTAMP(NANOS) which Spark cannot represent
       // natively (µs); read as LongType nanos and convert in Tables.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -293,18 +293,8 @@ object IvfIndex {
         .write.mode("append").option("compression", "zstd")
         .partitionBy("cluster" +: attrParts: _*)
         .parquet(s"$root/vectors")
-      // bounded wait (r19 ADVICE): Observation.get blocks forever if a
-      // sink ever stops delivering observed metrics — poll briefly, then
-      // degrade to the pre-r18 extra-count behavior instead of hanging
-      // the append under the writer lock.
-      val n = try {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        Await.result(Future(obs.get("n").asInstanceOf[Long]),
-          scala.concurrent.duration.Duration(10, "s"))
-      } catch {
-        case _: java.util.concurrent.TimeoutException => batch.count()
-      }
+      val n = observedCount(obs, "n",
+        scala.concurrent.duration.Duration(10, "s"))(batch.count())
       if (tag != null)
         IngestMarkers.writeAppliedMarkerAt(batch.select("id"), root, tag)
       val newAppended = appended + n
@@ -318,6 +308,19 @@ object IvfIndex {
         fraction
       }
   }
+
+  /** The long metric `name` of `obs`, waited for at most `bound`, else
+    * `fallback`: Observation.get blocks forever if a sink ever stops
+    * delivering observed metrics, and an append must not hang under the
+    * writer lock. Waits on the observation's own future, so a timeout
+    * leaves no thread behind (a Future around the blocking `get` would
+    * park a pool thread for good on every timeout). */
+  private[pipeline] def observedCount(obs: org.apache.spark.sql.Observation,
+                                      name: String,
+                                      bound: scala.concurrent.duration.Duration)
+                                     (fallback: => Long): Long =
+    try scala.concurrent.Await.result(obs.future, bound).getAs[Long](name)
+    catch { case _: java.util.concurrent.TimeoutException => fallback }
 
   /** Appended-since-build fraction of the index at `path`. */
   def appendedFraction(spark: SparkSession, path: String): Double = {

@@ -29,7 +29,10 @@ private[pipeline] object MetaCache {
     }
 
   /** Write identity of the small parquet dir at `dir`: sorted file
-    * (name:len:mtime) listing. Null when the dir cannot be listed. */
+    * (name:len:mtime) listing. Null when the dir cannot be listed — for ANY
+    * non-fatal failure, not only IOException (a FileSystem implementation
+    * may surface a listing fault as a RuntimeException): the caller then
+    * takes the uncached, retried load instead of failing the serve. */
   private def stamp(spark: SparkSession, dir: String): String =
     try {
       val p = new org.apache.hadoop.fs.Path(dir)
@@ -37,7 +40,7 @@ private[pipeline] object MetaCache {
       fs.listStatus(p)
         .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
         .sorted.mkString(";")
-    } catch { case _: java.io.IOException => null }
+    } catch { case scala.util.control.NonFatal(_) => null }
 
   /** `load` the value for `dir` once per on-disk write of it. */
   def cached[A <: AnyRef](spark: SparkSession, dir: String)(load: => A): A = {

@@ -1,7 +1,12 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlBridge
+import org.apache.spark.sql.types._
 import graft.engine.Parallelism.spread
 
 /** Embedding similarity search over an Array[Float] column.
@@ -177,10 +182,25 @@ object Similarity {
     row(0).getInt(0)
   }
 
-  /** literal array-of-structs (cid, cv) for a centroid set. */
+  /** Type of [[centroidsCol]]: exactly what
+    * `array(struct(lit(i).as("cid"), array(cv.map(lit)).as("cv")), ...)`
+    * resolves to, nullability included. */
+  private val CentroidsType = ArrayType(StructType(Seq(
+    StructField("cid", IntegerType, nullable = false),
+    StructField("cv", ArrayType(DoubleType, containsNull = false), nullable = false))),
+    containsNull = false)
+
+  /** The centroid set as ONE literal array-of-structs (cid, cv). Spelled
+    * as nLists x (dim + 1) `lit` Columns it cost the analyzer and
+    * optimizer a walk over every element on each serve (a 142-list
+    * 64-d index is 9,230 expression nodes); one Literal of the same type
+    * is a single node at any size, and codegen passes it as a reference
+    * object rather than inlined constants. */
   private[pipeline] def centroidsCol(cents: Array[Array[Double]]): Column =
-    array(cents.indices.map(i =>
-      struct(lit(i).as("cid"), array(cents(i).map(lit).toIndexedSeq: _*).as("cv"))): _*)
+    GraftSqlBridge.column(Literal(
+      new GenericArrayData(cents.indices.map(i =>
+        InternalRow(i, ArrayData.toArrayData(cents(i))))),
+      CentroidsType))
 
   /** squared-L2 distances to every centroid as array<struct(d, cid)> —
     * array_sort on it gives the nProbe probe ORDER for the (small) query

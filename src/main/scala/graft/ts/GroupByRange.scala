@@ -22,9 +22,12 @@ import org.apache.spark.sql.functions._
   *              anchor stay NULL (the reference fills only between anchors).
   *
   * Scale notes: the aggregation is a plain hash groupBy on (keys, bucket) —
-  * partial aggregation + AQE handle skew; the grid is tiny ((end-start)/every
-  * rows per key) so the fill join broadcasts, and the fill window partitions
-  * by `keys`.
+  * partial aggregation + AQE handle skew. An unkeyed grid of at most
+  * `TimeSeriesOps.SmallGrid` buckets is generated as ONE partition and the
+  * bucket aggregate (bounded by the grid) broadcasts into it, so the fill
+  * windows and the final ORDER BY run in that partition with no exchange:
+  * the aggregate's own shuffle is the plan's only one. Larger unkeyed grids
+  * take the chunked fill; keyed fills partition the window by `keys`.
   */
 object GroupByRange {
 
@@ -55,31 +58,34 @@ object GroupByRange {
     val aggNames = agged.columns.filterNot(c => c == "ts_ms" || keys.contains(c)).toSeq
     val spark = df.sparkSession
     val nBuckets = (endMs - startMs) / everyMs + 1
+    // unkeyed fill is size-adaptive: the bucket count is static, so a small
+    // grid (the whole fill frame is bounded by the grid, not the data) is
+    // one partition that the broadcast aggregate joins into — Range(1 slice)
+    // reports SinglePartition, which satisfies the window's clustering and
+    // the ORDER BY's ordering, so neither plans an exchange (7 stages -> 3
+    // for FILL (LINEAR)). Only genuinely large grids pay the chunked plan's
+    // extra stitch stages.
+    val small = keys.isEmpty && nBuckets <= TimeSeriesOps.SmallGrid
     val grid =
-      if (keys.isEmpty)
-        // distributed grid: one bucket per range element, no driver array
-        spark.range(nBuckets).select((col("id") * everyMs + startMs).as("ts_ms"))
-      else {
+      if (keys.isEmpty) {
+        // one bucket per range element, no driver array
+        val ids = if (small) spark.range(0, nBuckets, 1, 1) else spark.range(nBuckets)
+        ids.select((col("id") * everyMs + startMs).as("ts_ms"))
+      } else {
         val gridTimes = explode(sequence(lit(startMs),
           lit(startMs + (nBuckets - 1) * everyMs), lit(everyMs))).as("ts_ms")
         df.select(keyCols: _*).distinct().select((keyCols :+ gridTimes): _*)
       }
 
-    val joined = grid.join(agged, keys :+ "ts_ms", "left")
+    val joined = grid.join(if (small) broadcast(agged) else agged, keys :+ "ts_ms", "left")
       .withColumn("__empty", aggNames.map(col(_).isNull).reduce(_ && _))
 
-    // unkeyed fill is size-adaptive: the bucket count is static, so small
-    // grids (where the whole fill frame is one trivially small partition —
-    // bounded by the grid, not the data) take the plain window path under a
-    // constant partition key, and only genuinely large grids pay the chunked
-    // plan's extra stitch stages
     val part: Seq[Column] =
       if (keys.isEmpty) Seq(pmod(col("ts_ms"), lit(1))) else keyCols
     fill match {
       case FillNull | FillNone =>
         joined.drop("__empty").orderBy((keyCols :+ col("ts_ms")): _*)
-      case FillPrevious | FillLinear
-          if keys.isEmpty && nBuckets > TimeSeriesOps.SmallGrid =>
+      case FillPrevious | FillLinear if keys.isEmpty && !small =>
         fillChunked(joined, aggNames, startMs, everyMs, fill == FillLinear)
       case FillPrevious =>
         val w = Window.partitionBy(part: _*).orderBy(col("ts_ms"))
@@ -91,11 +97,10 @@ object GroupByRange {
         }
         filled.drop("__empty").orderBy((keyCols :+ col("ts_ms")): _*)
       case FillLinear =>
-        // unkeyed: materialize the constant partition key as a column (r18,
-        // guide §2.4) — a raw expression key re-projects as a fresh `_w0`
-        // per Window node, so the asc/desc pair paid TWO Exchanges; under
-        // one named column the desc window reuses the asc exchange and only
-        // re-sorts (2 Exchange -> 1)
+        // unkeyed: the constant partition key is a named column so the asc
+        // and desc windows share one partitioning (a raw expression key
+        // re-projects as a fresh `_w0` per Window node); on the one-partition
+        // grid neither window needs an exchange, only a local sort each
         val (joinedP, partC) =
           if (keys.isEmpty)
             (joined.withColumn("__cpart", pmod(col("ts_ms"), lit(1))),

@@ -333,14 +333,14 @@ object TimeSeriesOps {
           col("__exact").as("pc"), col("__first").as("nc")))).as("e"))
       .select(col("e.k").as("k"), col("e.tie").as("tie"),
         col("e.pc").as("pc"), col("e.nc").as("nc"), lit(0).as("is_grid"))
-      .unionByName(spark.range(n + 1).select(col("id").as("k"), lit(2).as("tie"),
+      .unionByName(spark.range(0, n + 1, 1, 1).select(col("id").as("k"), lit(2).as("tie"),
         nullRow.as("pc"), nullRow.as("nc"), lit(1).as("is_grid")))
-    // constant partition key: frame is grid-sized by construction.
-    // MATERIALIZED as a column (r18, guide §2.4): a raw expression key is
-    // re-projected by ExtractWindowExpressions as a fresh `_w0` attribute
-    // per Window node, so the asc/desc pair read as DIFFERENT partitionings
-    // and paid TWO Exchanges; under one named column the second window
-    // reuses the first's exchange and only re-sorts (2 Exchange -> 1).
+      .coalesce(1)
+    // the frame is grid-sized by construction, so it is gathered into ONE
+    // partition without a shuffle (coalesce(1) reports SinglePartition):
+    // both bracketing windows then run there with a local sort each and no
+    // exchange (3 stages -> 2). The constant `__cpart` key stays a named
+    // column so the asc/desc windows read as one partitioning.
     val wP = Window.partitionBy(col("__cpart")).orderBy(col("k").asc, col("tie").asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wN = Window.partitionBy(col("__cpart")).orderBy(col("k").desc, col("tie").asc)

@@ -91,11 +91,33 @@ class PlanShapeSpec extends SparkTestBase {
       s"nothing quadratic in the ingest gate\n$plan")
   }
 
+  // AQE's toString renders the final AND the initial plan — count
+  // markers in the final section only
+  private def finalSection(name: String): String =
+    finalPlan(name).split("== Initial Plan ==").head
+
+  test("range-fill linear: one-partition grid — the aggregate's exchange is the only one") {
+    val plan = finalSection("q_ts_range_fill_linear")
+    // the small grid is one Range slice joined to the broadcast aggregate,
+    // so the fill windows and the ORDER BY need no exchange of their own
+    assert(occurrences(plan, "hashpartitioning") == 1,
+      s"expected only the bucket aggregate's hash exchange\n$plan")
+    assert(!plan.contains("rangepartitioning"),
+      s"the ORDER BY must not range-shuffle a one-partition grid\n$plan")
+  }
+
+  test("time-sampling: one-partition frame — the cell aggregate's exchange is the only one") {
+    val plan = finalSection("q_ts_time_sampling")
+    // grid + cell frame coalesce into one partition without a shuffle, so
+    // both bracketing windows run there with no exchange
+    assert(occurrences(plan, "hashpartitioning") == 1,
+      s"expected only the cell aggregate's hash exchange\n$plan")
+    assert(!plan.contains("rangepartitioning"),
+      s"no range exchange on the sampling path\n$plan")
+  }
+
   test("shuffle shards: one shard exchange + one window pass, no global sort of the data") {
-    // AQE's toString renders the final AND the initial plan — count
-    // markers in the final section only
-    val plan = finalPlan("q_pipeline_shuffle_shards")
-      .split("== Initial Plan ==").head
+    val plan = finalSection("q_pipeline_shuffle_shards")
     assert(occurrences(plan, "Window") == 1,
       s"exactly one window pass assigns in-shard positions\n$plan")
     // the only hash exchange is the shard one; the trailing range
