@@ -50,9 +50,9 @@ object ExactIndex {
     Dedup.verifyPartitions(math.max(n, 1L),
       spark.sessionState.conf.numShufflePartitions, 1000000L)
 
-  /** The data subtrees a version of this index owns (see
+  /** The payload subtrees a version of this index owns (see
     * [[IndexVersions]] — also the legacy-root GC list). */
-  private[pipeline] val DataDirs = Seq("digests", "meta", "tagmeta", "applied")
+  private[pipeline] val DataDirs = Seq("digests", "meta", "tagmeta")
 
   /** The CURRENT version's data root (see [[MinhashIndex.dataRoot]]). */
   def dataRoot(spark: SparkSession, path: String): String =
@@ -64,9 +64,7 @@ object ExactIndex {
   def build(corpus: DataFrame, textCol: String, idCol: String, path: String,
             corpusSize: Long = -1L): Unit = {
     val spark = corpus.sparkSession
-    WriterLock.withLock(spark, path) {
-      val prevRoot = IndexVersions.currentRoot(spark, path)
-      val root = IndexVersions.stage(spark, path)
+    IndexVersions.replace(spark, path, DataDirs) { (_, root) =>
       val n = if (corpusSize > 0) corpusSize else corpus.count()
       digestRows(corpus, textCol, idCol)
         .withColumn("ingest", lit("base"))
@@ -77,8 +75,6 @@ object ExactIndex {
       // corpus size — parquet footer counts only, no data read (r15
       // verdict #8: meta used to drift upward until compact recounted)
       refreshMeta(spark, root, recount = Set("base"))
-      IngestMarkers.copyApplied(spark, prevRoot, root)
-      IndexVersions.commit(spark, path, root, DataDirs)
     }
   }
 
@@ -91,8 +87,8 @@ object ExactIndex {
   def append(newDocs: DataFrame, textCol: String, idCol: String,
              path: String, batchSize: Long = -1L,
              tag: String = null): Long =
-    WriterLock.withLock(newDocs.sparkSession, path) {
-      appendLocked(newDocs, textCol, idCol, path, batchSize, tag, None)
+    IndexVersions.inPlace(newDocs.sparkSession, path) { root =>
+      appendLocked(newDocs, textCol, idCol, root, batchSize, tag, None)
     }
 
   /** Append + applied-marker write as ONE locked operation (see
@@ -100,15 +96,14 @@ object ExactIndex {
   def appendApplied(newDocs: DataFrame, textCol: String, idCol: String,
                     path: String, tag: String,
                     survivorIds: DataFrame): Long =
-    WriterLock.withLock(newDocs.sparkSession, path) {
-      appendLocked(newDocs, textCol, idCol, path, -1L, tag, Some(survivorIds))
+    IndexVersions.inPlace(newDocs.sparkSession, path) { root =>
+      appendLocked(newDocs, textCol, idCol, root, -1L, tag, Some(survivorIds))
     }
 
   private def appendLocked(newDocs: DataFrame, textCol: String, idCol: String,
-                           path: String, batchSize: Long, tag: String,
+                           root: String, batchSize: Long, tag: String,
                            markerIds: Option[DataFrame]): Long = {
     val spark = newDocs.sparkSession
-    val root = IndexVersions.writeRoot(spark, path)
     val add = if (batchSize > 0) batchSize else newDocs.count()
     // default tag from the on-disk auto-tag high-water mark, NOT nDocs
     // (compact can move nDocs backwards — MinhashIndex.defaultTag)
@@ -195,12 +190,10 @@ object ExactIndex {
     * window rule, same maintenance-op reader contract), dedup digests to
     * their MIN owner id, recount meta exactly. */
   def compact(spark: SparkSession, path: String): Unit =
-    WriterLock.withLock(spark, path) {
-      val root = IndexVersions.currentRoot(spark, path)
+    IndexVersions.replace(spark, path, DataDirs) { (root, staged) =>
       val marked = IngestMarkers.markedTags(spark, path)
       val all = spark.read.parquet(s"$root/digests")
       val foldable = col("ingest") === "base" || col("ingest").isin(marked: _*)
-      val staged = IndexVersions.stage(spark, path)
       val m = readMetaAt(spark, root)
       all.filter(foldable)
         .groupBy(col("h")).agg(min(col("id")).as("id"))
@@ -214,8 +207,6 @@ object ExactIndex {
       // the staged tree has no tagmeta yet, so every surviving tag
       // footer-counts once — the full recount a compact owes anyway
       refreshMeta(spark, staged, recount = Set.empty)
-      IngestMarkers.copyApplied(spark, root, staged)
-      IndexVersions.commit(spark, path, staged, DataDirs)
     }
 
   /** Digest hits of `batch` against the indexed corpus — the persisted
@@ -227,7 +218,7 @@ object ExactIndex {
     val spark = batch.sparkSession
     // resolve the version root ONCE per plan (immutable files — see
     // IndexVersions' reader contract)
-    val idx = IngestMarkers.retryTransient(
+    val idx = IndexVersions.retryTransient(
       spark.read.parquet(s"${IndexVersions.currentRoot(spark, path)}/digests"))
     batch.where(col(textCol).isNotNull)
       .select(col(idCol).as("a"), md5(col(textCol)).as("h"))
@@ -286,7 +277,7 @@ object ExactIndex {
   }
 
   def readMeta(spark: SparkSession, path: String): Meta =
-    IngestMarkers.retryTransient {
+    IndexVersions.retryTransient {
       readMetaAt(spark, IndexVersions.currentRoot(spark, path))
     }
 
@@ -294,8 +285,6 @@ object ExactIndex {
   // one-row Spark job when the meta tree is unchanged since the last read
   private def readMetaAt(spark: SparkSession, root: String): Meta =
     MetaCache.cached(spark, s"$root/meta") {
-      IngestMarkers.retryTransient {
-        Meta(spark.read.parquet(s"$root/meta").head().getLong(0))
-      }
+      Meta(spark.read.parquet(s"$root/meta").head().getLong(0))
     }
 }

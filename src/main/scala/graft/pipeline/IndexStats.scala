@@ -50,16 +50,15 @@ object IndexStats {
   }
 
   /** The family meta rendered `k=v,...` (columns sorted by name; the
-    * newest row by meta_seq where the family appends meta). Empty when no
-    * meta tree exists. */
+    * newest row where the family appends meta). Empty when no meta tree
+    * exists. */
   private def metaSummary(spark: SparkSession, root: String): String =
     try {
       val df = spark.read.option("mergeSchema", "true").parquet(s"$root/meta")
-      val row =
-        if (df.columns.contains("meta_seq"))
-          df.orderBy(org.apache.spark.sql.functions.col("meta_seq")
-            .desc_nulls_last).head()
-        else df.head()
+      // IVF orders its rows by meta_seq; a minhash count only grows
+      val newest = Seq("meta_seq", "n_docs").find(df.columns.contains)
+      val row = newest.fold(df.head())(c =>
+        df.orderBy(org.apache.spark.sql.functions.col(c).desc_nulls_last).head())
       df.columns.sorted.map { c =>
         s"$c=${Option(row.getAs[Any](c)).getOrElse("null")}"
       }.mkString(",")
@@ -69,7 +68,7 @@ object IndexStats {
     import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val vs = IndexVersions.versionList(spark, path).sortBy(_._1)
+    val vs = IndexVersions.versions(spark, path).sortBy(_._1)
     val committed = vs.filter(_._2).map(_._1)
     val currentV = committed.maxOption
     val floor = IndexVersions.minRetainMs(spark)
@@ -86,7 +85,7 @@ object IndexStats {
       if (!isCommitted) (None, "staging")
       else if (currentV.contains(v)) (None, "current")
       else {
-        val at = IndexVersions.supersededAtOf(fs, path, committed, v)
+        val at = IndexVersions.supersededAt(fs, path, committed, v)
         val label =
           if (currentV.exists(_ - 1 == v)) "grace"
           else if (overCap(v)) "cap"
@@ -128,19 +127,19 @@ object IndexStats {
     // pre-versioned trees directly at the root (the legacy "version")
     val legacyRows =
       if (familyOf(fs, path) != "unknown" && path != currentRoot) {
-        val at = IndexVersions.supersededAtOf(fs, path, committed, 0)
+        val at = IndexVersions.supersededAt(fs, path, committed, 0)
         // the DETECTED family's own DataDirs list (r17 ADVICE: the
         // all-family union was correct only while no two families share
         // a dir name — a family adding an overlapping subtree would have
         // double-counted); still owned by the kernels, so a family
         // adding a subtree stays covered automatically
-        val familyDirs = familyOf(fs, path) match {
+        val familyDirs = IndexVersions.legacyDirs(familyOf(fs, path) match {
           case "exact" => ExactIndex.DataDirs
           case "minhash" => MinhashIndex.DataDirs
           case "ann" => IvfIndex.DataDirs
           case _ => (ExactIndex.DataDirs ++ MinhashIndex.DataDirs ++
             IvfIndex.DataDirs).distinct
-        }
+        })
         val (files, bytes) = familyDirs
           .map(d => contentOf(fs, new org.apache.hadoop.fs.Path(s"$path/$d")))
           .reduce((a, b) => (a._1 + b._1, a._2 + b._2))

@@ -28,8 +28,13 @@ import org.apache.spark.sql.SparkSession
   * trees in place as the grace "version" and a later one removes them once
   * the age floor passes (immediately, under `minRetainMs = 0`).
   *
-  * Writers are serialized by [[WriterLock]] as before; this object owns
-  * only version resolution, commit, and GC.
+  * This object owns the whole lifecycle of all three index families
+  * ([[IvfIndex]], [[MinhashIndex]], [[ExactIndex]]): the two writer forms
+  * ([[replace]] for a new version, [[inPlace]] for an append inside the
+  * current one, both under [[WriterLock]]), carrying the `applied/`
+  * ingest markers across the flip, commit, GC, and the one reader retry
+  * ([[retryTransient]]). Each family supplies only its payload write and
+  * names its payload dirs.
   */
 private[pipeline] object IndexVersions {
 
@@ -44,13 +49,8 @@ private[pipeline] object IndexVersions {
 
   /** (version, committed?) pairs of every `v=N` dir under `path`
     * ([[IndexStats]] reads this listing for observability). */
-  private[pipeline] def versionList(spark: SparkSession,
-                                    path: String): Seq[(Int, Boolean)] =
-    versions(spark, path)
-
-  /** (version, committed?) pairs of every `v=N` dir under `path`. */
-  private def versions(spark: SparkSession,
-                       path: String): Seq[(Int, Boolean)] = {
+  private[pipeline] def versions(spark: SparkSession,
+                                 path: String): Seq[(Int, Boolean)] = {
     val (fs, p) = fsOf(spark, path)
     if (!fs.exists(p)) Nil
     else fs.listStatus(p).toSeq.flatMap { st =>
@@ -70,11 +70,40 @@ private[pipeline] object IndexVersions {
     versions(spark, path).filter(_._2).map(_._1).maxOption
       .map(n => s"$path/v=$n").getOrElse(path)
 
-  /** The data root a WRITER that mutates IN PLACE (append) should use:
-    * same resolution — appends land inside the current version (additive
-    * partitions; safe under serving). Call under the writer lock. */
-  def writeRoot(spark: SparkSession, path: String): String =
-    currentRoot(spark, path)
+  /** Mutate the CURRENT version in place (appends, marker pruning):
+    * `body` gets the root resolved under the writer lock — appends land
+    * inside the current version (additive partitions; safe under
+    * serving), and no concurrent commit can retire the root mid-body. */
+  def inPlace[A](spark: SparkSession, path: String)(body: String => A): A =
+    WriterLock.withLock(spark, path) { body(currentRoot(spark, path)) }
+
+  /** Write a full REPLACEMENT version (build/compact/retrain): under the
+    * writer lock, resolve the previous root, [[stage]] the next version,
+    * run the family's payload `write(previousRoot, stagedRoot)`, carry the
+    * applied markers forward (replay evidence must survive the flip), then
+    * [[commit]]. A failure anywhere before the commit leaves the staged
+    * tree invisible, and the next replace clears it. `dataDirs` are the
+    * family's payload dirs (see [[legacyDirs]]). `lockHeld` is for a
+    * caller already inside the writer lock (IVF's auto-retrain at the end
+    * of an append). */
+  def replace[A](spark: SparkSession, path: String, dataDirs: Seq[String],
+                 lockHeld: Boolean = false)(write: (String, String) => A): A = {
+    def run(): A = {
+      val prev = currentRoot(spark, path)
+      val staged = stage(spark, path)
+      val out = write(prev, staged)
+      IngestMarkers.copyApplied(spark, prev, staged)
+      commit(spark, path, staged, legacyDirs(dataDirs))
+      out
+    }
+    if (lockHeld) run() else WriterLock.withLock(spark, path)(run())
+  }
+
+  /** The trees a legacy (unversioned) index of a family holds at its
+    * root — the family's payload `dataDirs` plus the `applied` markers
+    * every family carries — and so what legacy GC deletes. */
+  private[pipeline] def legacyDirs(dataDirs: Seq[String]): Seq[String] =
+    dataDirs :+ "applied"
 
   /** Staging root for a full REPLACEMENT tree (build/compact/retrain):
     * `<path>/v=N+1`, invisible to readers until [[commit]]. Also clears
@@ -114,13 +143,9 @@ private[pipeline] object IndexVersions {
   /** Epoch ms at which version `m` was SUPERSEDED: the commit time of the
     * smallest committed version above it (a plan can have pinned `m` right
     * up to that instant). */
-  private[pipeline] def supersededAtOf(fs: org.apache.hadoop.fs.FileSystem,
-                                       path: String, committed: Seq[Int],
-                                       m: Int): Long =
-    supersededAt(fs, path, committed, m)
-
-  private def supersededAt(fs: org.apache.hadoop.fs.FileSystem, path: String,
-                           committed: Seq[Int], m: Int): Long =
+  private[pipeline] def supersededAt(fs: org.apache.hadoop.fs.FileSystem,
+                                     path: String, committed: Seq[Int],
+                                     m: Int): Long =
     committed.filter(_ > m).minOption
       .map { s =>
         // a successor already GC'd in this pass was itself superseded long
@@ -144,19 +169,11 @@ private[pipeline] object IndexVersions {
     val (fs, _) = fsOf(spark, path)
     val n = stagedRoot.substring(stagedRoot.lastIndexOf("v=") + 2).toInt
     val committedFile = new org.apache.hadoop.fs.Path(s"$stagedRoot/_COMMITTED")
-    // the marker body is a build-unique token (r19 ADVICE): in-process
-    // caches keyed on the ROOT PATH alone would collide when DROP +
-    // re-CREATE recycles the same v=N root, and mtime resolution is
-    // coarse on some stores — the token gives every committed build an
-    // identity. Visibility is still the CREATE (exists-gated readers are
-    // unchanged); create(overwrite=false) throws if the marker exists,
-    // preserving the old createNewFile commit-once contract.
-    val ok = try {
-      val out = fs.create(committedFile, false)
-      out.write(java.util.UUID.randomUUID().toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close(); true
-    } catch { case _: java.io.IOException => false }
+    // one create of an EMPTY file: the marker has no body to tear, so a
+    // marker that exists always means the version is committed;
+    // create(overwrite=false) throws if it exists (commit-once)
+    val ok = try { fs.create(committedFile, false).close(); true }
+             catch { case _: java.io.IOException => false }
     require(ok, s"could not commit index version $n at $path")
     val floor = minRetainMs(spark)
     val cap = math.max(maxRetained(spark), 1)
@@ -196,5 +213,29 @@ private[pipeline] object IndexVersions {
         fs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true)
         ()
       }
+  }
+
+  /** Retry a read that can transiently fail while a writer changes the
+    * small meta/listing files, or while GC retires the root a reader just
+    * resolved. A retried block must resolve the root itself, so a retry
+    * never re-reads a deleted root. */
+  def retryTransient[T](f: => T, attempts: Int = 5): T = {
+    var left = attempts
+    while (true) {
+      try return f
+      catch {
+        case e: Exception if left > 0 && isTransient(e) =>
+          left -= 1; Thread.sleep(200)
+      }
+    }
+    sys.error("unreachable")
+  }
+
+  private def isTransient(e: Throwable): Boolean = {
+    val m = Option(e.getMessage).getOrElse("")
+    e.isInstanceOf[java.io.FileNotFoundException] ||
+      m.contains("does not exist") || m.contains("infer schema") ||
+      m.contains("PATH_NOT_FOUND") || m.contains("UNABLE_TO_INFER") ||
+      (e.getCause != null && isTransient(e.getCause))
   }
 }

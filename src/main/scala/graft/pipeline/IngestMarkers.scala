@@ -15,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  - markers are prunable once the ingest's own commit point passes (for
   *    a streaming gate: once the checkpoint commits the batch).
   *
-  * Also hosts the transient-read retry both index families' probe paths
-  * use through writer swap windows.
+  * [[IndexVersions.replace]] carries the markers into every new version;
+  * the reader retry lives there too ([[IndexVersions.retryTransient]]).
   */
 private[pipeline] object IngestMarkers {
 
@@ -114,9 +114,8 @@ private[pipeline] object IngestMarkers {
     * @return names actually removed (both deletes verified). */
   def pruneAppliedMarkers(spark: SparkSession, path: String,
                           keep: String => Boolean): Seq[String] =
-    WriterLock.withLock(spark, path) {
-      val dir = new org.apache.hadoop.fs.Path(
-        s"${IndexVersions.currentRoot(spark, path)}/applied")
+    IndexVersions.inPlace(spark, path) { root =>
+      val dir = new org.apache.hadoop.fs.Path(s"$root/applied")
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(dir)) Nil
       else fs.listStatus(dir).toSeq.map(_.getPath)
@@ -141,28 +140,5 @@ private[pipeline] object IngestMarkers {
         new org.apache.hadoop.fs.Path(s"$toRoot/applied"), false, conf)
       ()
     }
-  }
-
-  /** Retry a read that can transiently fail while a writer swaps the
-    * small meta/listing files — the reader half of the WriterLock
-    * contract. */
-  def retryTransient[T](f: => T, attempts: Int = 5): T = {
-    var left = attempts
-    while (true) {
-      try return f
-      catch {
-        case e: Exception if left > 0 && isTransient(e) =>
-          left -= 1; Thread.sleep(200)
-      }
-    }
-    sys.error("unreachable")
-  }
-
-  private def isTransient(e: Throwable): Boolean = {
-    val m = Option(e.getMessage).getOrElse("")
-    e.isInstanceOf[java.io.FileNotFoundException] ||
-      m.contains("does not exist") || m.contains("infer schema") ||
-      m.contains("PATH_NOT_FOUND") || m.contains("UNABLE_TO_INFER") ||
-      (e.getCause != null && isTransient(e.getCause))
   }
 }

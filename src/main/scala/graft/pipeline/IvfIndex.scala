@@ -22,15 +22,17 @@ import org.apache.spark.sql.functions._
   */
 object IvfIndex {
 
-  /** Writer mutex serializing APPEND and RETRAIN against each other;
-    * acquire semantics (and their filesystem caveats) live in the shared
-    * [[WriterLock]]. Reads need no lock — [[topK]] retries through the
-    * retrain swap's rename window instead. */
-  private def withWriterLock[A](spark: SparkSession, path: String,
-                                waitMs: Long = 600000L)(body: => A): A =
-    WriterLock.withLock(spark, path, waitMs)(body)
+  /** The payload subtrees a version of this index owns (see
+    * [[IndexVersions]] — also the legacy-root GC list). */
+  private[pipeline] val DataDirs = Seq("centroids", "vectors", "meta", "sqstats")
 
-  /** Train + write the index. Overwrites `path`.
+  /** The CURRENT version's data root (see [[MinhashIndex.dataRoot]]). */
+  def dataRoot(spark: SparkSession, path: String): String =
+    IndexVersions.currentRoot(spark, path)
+
+  /** Train + write the index as a fresh [[IndexVersions]] version at
+    * `path`: readers of the previous version keep serving until the
+    * commit, and its applied markers (idempotency tags) carry forward.
     *
     * `codec = "sq8"` stores the inverted lists as SQ8 codes instead of raw
     * doubles ([[Quantize]]): the vectors tree — the part of the index that
@@ -42,21 +44,15 @@ object IvfIndex {
     * reconstruction at the edges, not correctness), and retrain re-trains
     * centroids AND stats from the reconstructions (the originals are gone
     * — that is what compression means; re-gridding reconstructions adds
-    * at most one quantization step of error). */
-  /** `attrCols` are scalar metadata columns carried into the vectors tree
+    * at most one quantization step of error).
+    *
+    * `attrCols` are scalar metadata columns carried into the vectors tree
     * (source/date/lang/label — the fields a filtered serve predicates on,
     * the Milvus/Vespa scalar-field pattern). They cost their columnar
     * footprint and nothing else: unfiltered serves never read them, and a
-    * filtered serve's predicate evaluates inside the pruned parquet scan. */
-  /** The data subtrees a version of this index owns (see
-    * [[IndexVersions]] — also the legacy-root GC list). */
-  private[pipeline] val DataDirs = Seq("centroids", "vectors", "meta", "sqstats")
-
-  /** The CURRENT version's data root (see [[MinhashIndex.dataRoot]]). */
-  def dataRoot(spark: SparkSession, path: String): String =
-    IndexVersions.currentRoot(spark, path)
-
-  /** `attrPartitionBy` (r15, must be a subset of `attrCols`): LOW-
+    * filtered serve's predicate evaluates inside the pruned parquet scan.
+    *
+    * `attrPartitionBy` (r15, must be a subset of `attrCols`): LOW-
     * CARDINALITY attr columns to use as PHYSICAL partition directories
     * under each list — `vectors/cluster=X/label=Y/...` — so a filtered
     * serve's predicate on them prunes at the DIRECTORY level instead of
@@ -73,18 +69,14 @@ object IvfIndex {
   def build(corpus: DataFrame, idCol: String, vecCol: String, path: String,
             nLists: Int = -1, corpusSize: Long = -1L,
             codec: String = "raw", attrCols: Seq[String] = Nil,
-            attrPartitionBy: Seq[String] = Nil): Unit = {
-    val spark = corpus.sparkSession
-    withWriterLock(spark, path) {
-      val root = IndexVersions.stage(spark, path)
+            attrPartitionBy: Seq[String] = Nil): Unit =
+    IndexVersions.replace(corpus.sparkSession, path, DataDirs) { (_, root) =>
       buildAt(corpus, idCol, vecCol, root, nLists, corpusSize, codec,
         attrCols, attrPartitionBy)
-      IndexVersions.commit(spark, path, root, DataDirs)
     }
-  }
 
-  /** Write the index trees at a RESOLVED root (a staged version dir).
-    * Callers hold the writer lock and commit the version afterwards. */
+  /** Write the index trees at a RESOLVED root (a staged version dir,
+    * inside [[IndexVersions.replace]]). */
   private def buildAt(corpus: DataFrame, idCol: String, vecCol: String,
                       path: String, nLists: Int, corpusSize: Long,
                       codec: String, attrCols: Seq[String],
@@ -220,12 +212,15 @@ object IvfIndex {
     * `tag` (optional, r17 verdict #2 — idempotent DDL appends): a
     * client-supplied idempotency tag. A replayed append carrying a tag
     * this index already applied is SKIPPED under the writer lock (the
-    * marker at `applied/<tag>` is the evidence, surviving retrains via
-    * [[IngestMarkers.copyApplied]]), so a JDBC client retrying a
+    * marker at `applied/<tag>` is the evidence, carried into every new
+    * version by [[IndexVersions.replace]]), so a JDBC client retrying a
     * timed-out-but-completed `ALTER INDEX ... APPEND ... TAG 'x'` cannot
     * double-insert the batch into the lists. The marker is written after
     * the batch's job commits — a crash between the two re-appends on
-    * replay, the same narrow window the dedup families document.
+    * replay, the same narrow window the dedup families document. The
+    * vectors write lands one file per list, so a crash inside its commit
+    * can also leave part of the batch visible until the replay
+    * (IndexFaultSpec exempts exactly this window).
     *
     * @return the appended fraction AFTER this append (0.0 right after a
     *         rebuild, i.e. when `autoRetrain` fired). */
@@ -234,22 +229,21 @@ object IvfIndex {
              autoRetrain: Boolean = false, tag: String = null): Double = {
     val spark = newVectors.sparkSession
     graft.functions.GridDbScalarFunctions.register(spark)
-    withWriterLock(spark, path) {
+    IndexVersions.inPlace(spark, path) { root =>
       if (tag != null &&
           IngestMarkers.appliedMarker(spark, path, tag).isDefined) {
         // replay: the tag already applied — report the unchanged fraction
-        val (b, a) = readMeta(spark, IndexVersions.currentRoot(spark, path))
+        val (b, a) = readMeta(spark, root)
         a.toDouble / math.max(b, 1L)
-      } else appendLocked(spark, path, newVectors, idCol, vecCol,
+      } else appendLocked(spark, path, root, newVectors, idCol, vecCol,
         retrainThreshold, autoRetrain, tag)
     }
   }
 
-  private def appendLocked(spark: SparkSession, path: String,
+  private def appendLocked(spark: SparkSession, path: String, root: String,
                            newVectors: DataFrame, idCol: String,
                            vecCol: String, retrainThreshold: Double,
                            autoRetrain: Boolean, tag: String): Double = {
-      val root = IndexVersions.writeRoot(spark, path)
       val cents = loadCentroids(spark, root)
       // read meta BEFORE the write: the legacy-index fallback counts the
       // vectors dir, and counting AFTER the append would fold the new batch
@@ -300,7 +294,7 @@ object IvfIndex {
       val newAppended = appended + n
       val fraction = newAppended.toDouble / math.max(built, 1L)
       if (fraction >= retrainThreshold && autoRetrain) {
-        retrainLocked(spark, path)
+        retrainVersion(spark, path, lockHeld = true)
         0.0
       } else {
         writeMeta(spark, root, built, newAppended, attrParts, m.partSchema,
@@ -340,32 +334,29 @@ object IvfIndex {
     * commit it as a new [[IndexVersions]] version. Serialized against
     * concurrent appends via the writer lock; NON-DISRUPTIVE to concurrent
     * [[topK]] reads — in-flight plans keep their pinned version (the
-    * grace copy), new plans resolve to the retrained one. */
+    * grace copy), new plans resolve to the retrained one. Applied
+    * markers (idempotency tags) survive the flip. */
   def retrain(spark: SparkSession, path: String): Unit =
-    withWriterLock(spark, path) { retrainLocked(spark, path) }
+    retrainVersion(spark, path, lockHeld = false)
 
-  private def retrainLocked(spark: SparkSession, path: String): Unit = {
-    val root = IndexVersions.currentRoot(spark, path)
-    val meta = readMetaFull(spark, root)
-    val raw = readVectors(spark, root, meta.partSchema)
-    val codec = codecOf(raw)
-    val attrs = attrColsOf(raw)
-    // sq8: the originals are gone — rebuild from the reconstructions
-    // (fresh centroids, fresh grid; ≤ one extra quantization step)
-    val all =
-      if (codec == "sq8") {
-        val stats = loadSqStats(spark, root)
-        raw.select(col("id") +: Quantize.sqDecode(col("codes"), stats).as("cv") +:
-          attrs.map(col): _*)
-      } else raw.select(col("id") +: col("cv") +: attrs.map(col): _*)
-    val staged = IndexVersions.stage(spark, path)
-    buildAt(all, "id", "cv", staged, nLists = -1, corpusSize = -1L,
-      codec = codec, attrCols = attrs, attrPartitionBy = meta.parts)
-    // applied markers are replay evidence (idempotency tags) — they must
-    // survive the version flip like the dedup families' compact does
-    IngestMarkers.copyApplied(spark, root, staged)
-    IndexVersions.commit(spark, path, staged, DataDirs)
-  }
+  private def retrainVersion(spark: SparkSession, path: String,
+                             lockHeld: Boolean): Unit =
+    IndexVersions.replace(spark, path, DataDirs, lockHeld) { (root, staged) =>
+      val meta = readMetaFull(spark, root)
+      val raw = readVectors(spark, root, meta.partSchema)
+      val codec = codecOf(raw)
+      val attrs = attrColsOf(raw)
+      // sq8: the originals are gone — rebuild from the reconstructions
+      // (fresh centroids, fresh grid; ≤ one extra quantization step)
+      val all =
+        if (codec == "sq8") {
+          val stats = loadSqStats(spark, root)
+          raw.select(col("id") +: Quantize.sqDecode(col("codes"), stats).as("cv") +:
+            attrs.map(col): _*)
+        } else raw.select(col("id") +: col("cv") +: attrs.map(col): _*)
+      buildAt(all, "id", "cv", staged, nLists = -1, corpusSize = -1L,
+        codec = codec, attrCols = attrs, attrPartitionBy = meta.parts)
+    }
 
   private final case class IvfMeta(built: Long, appended: Long,
                                    parts: Seq[String], partSchema: String,
@@ -423,68 +414,12 @@ object IvfIndex {
     }
 
   /** Load the centroids (nLists x dim — driver-tiny by construction)
-    * from a RESOLVED data root. */
+    * from a RESOLVED data root. The serve path reads them through
+    * [[MetaCache]] (r18: the coarse quantizer is the one piece of an IVF
+    * index every production engine pins in RAM). */
   private def loadCentroids(spark: SparkSession, root: String): Array[Array[Double]] =
     spark.read.parquet(s"$root/centroids").orderBy("cluster")
       .collect().map(_.getSeq[Double](1).toArray)
-
-  /** In-process centroid cache for the serve path (r18, guide §1/§5: the
-    * coarse quantizer is the one piece of an IVF index every production
-    * engine pins in RAM). Centroids within a committed version root are
-    * immutable — build/retrain stage a NEW `v=N` and appends never touch
-    * `centroids/` — so a (root, _COMMITTED-token) key can never serve
-    * stale data: a DROP + re-CREATE that recycles `v=1` gets a fresh
-    * commit token. Legacy (unversioned) roots have no commit marker and
-    * skip the cache. Bounded LRU of soft references: at most
-    * [[Similarity.MaxCentroidCells]] doubles per entry, entries evict
-    * under memory pressure or beyond 64 indexes. */
-  private val centroidCache =
-    new java.util.LinkedHashMap[(String, String),
-        java.lang.ref.SoftReference[Array[Array[Double]]]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String),
-            java.lang.ref.SoftReference[Array[Array[Double]]]]): Boolean =
-        size() > 64
-    }
-
-  // build identity = the commit marker's TOKEN body (r19 ADVICE: mtime
-  // alone can collide when DROP + re-CREATE recycles the same v=N root
-  // within the store's mtime resolution — IndexVersions.commit writes a
-  // UUID into _COMMITTED since r19). Markers from older builds are empty;
-  // they fall back to the mtime stamp, no worse than before. Returns null
-  // when the marker is missing (legacy unversioned root — skip the cache).
-  private def commitStamp(spark: SparkSession, root: String): String =
-    try {
-      val p = new org.apache.hadoop.fs.Path(s"$root/_COMMITTED")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val st = fs.getFileStatus(p)
-      if (st.getLen > 0 && st.getLen <= 64) {
-        val in = fs.open(p)
-        try {
-          val buf = new Array[Byte](st.getLen.toInt)
-          in.readFully(0, buf)
-          new String(buf, java.nio.charset.StandardCharsets.UTF_8)
-        } finally in.close()
-      } else st.getModificationTime.toString
-    } catch { case _: java.io.IOException => null }
-
-  private def centroidsFor(spark: SparkSession, root: String): Array[Array[Double]] = {
-    val stamp = commitStamp(spark, root)
-    if (stamp == null) loadCentroids(spark, root) // legacy root: no version identity
-    else {
-      val key = (root, stamp)
-      val hit = centroidCache.synchronized {
-        Option(centroidCache.get(key)).flatMap(r => Option(r.get))
-      }
-      hit.getOrElse {
-        val cents = loadCentroids(spark, root)
-        centroidCache.synchronized {
-          centroidCache.put(key, new java.lang.ref.SoftReference(cents))
-        }
-        cents
-      }
-    }
-  }
 
   /** Top-k cosine neighbors of each query row against the indexed corpus.
     * Only the probed clusters' partitions are scanned: the probed-list
@@ -493,42 +428,9 @@ object IvfIndex {
     * to `maxBroadcastQueries` rows (counted, not assumed — the former
     * "broadcast-sized by contract" prose is now a measured gate); above
     * that the per-cluster join runs as a shuffle join, same results, no
-    * driver/executor-memory cliff. */
-  /** Serving reads retry through a concurrent retrain's swap window: the
-    * rename-aside swap has a sub-second instant where `path` holds no
-    * index, so a read that lands in it backs off and retries instead of
-    * failing the query (r10 ADVICE). Bounded: ~10 s, then the original
-    * error propagates (a MISSING index should still fail fast).
+    * driver/executor-memory cliff.
     *
-    * Scope (r11 review): the retry covers topK's PLANNING phase — the
-    * centroid load, the probe collect, and the vectors read's file
-    * listing. The returned DataFrame is lazy: if the swap lands between
-    * plan and execution, executor tasks can still hit the renamed part
-    * files and fail — rerun the query. And serving is not
-    * snapshot-isolated either way: a query that loaded pre-swap centroids
-    * may prune post-swap partitions with stale list ids — recall degrades
-    * for that one query. Operators wanting neither rerun nor one-query
-    * recall dips serialize retrains off-peak (the writer lock gives them
-    * the mutual-exclusion point). */
-  private def retryThroughSwap[A](body: => A): A = {
-    var attempt = 0
-    var result: Option[A] = None
-    while (result.isEmpty) {
-      try result = Some(body)
-      catch {
-        case e @ (_: java.io.FileNotFoundException |
-                  _: org.apache.spark.sql.AnalysisException) if attempt < 40 =>
-          val pathish = e.getMessage != null &&
-            (e.getMessage.contains("does not exist") || e.getMessage.contains("PATH_NOT_FOUND"))
-          if (!pathish) throw e
-          attempt += 1
-          Thread.sleep(250)
-      }
-    }
-    result.get
-  }
-
-  /** `predicate` (optional) restricts the search to index rows satisfying
+    * `predicate` (optional) restricts the search to index rows satisfying
     * it — evaluated over the [[build]]-time `attrCols` INSIDE the pruned
     * parquet scan (row-group pushdown; the vectors/codes of rejected rows
     * are never materialized). The probe set widens by the measured
@@ -538,7 +440,14 @@ object IvfIndex {
     * once beats 16/16-probed pruning machinery, and results are exact.
     * The two counts behind the selectivity are attr-column-only columnar
     * scans of the index (no vectors read); a production deployment caches
-    * them next to the index meta. */
+    * them next to the index meta.
+    *
+    * Planning reads (root, centroids, tree listing, meta, sqstats) retry
+    * as one block through [[IndexVersions.retryTransient]]: each attempt
+    * re-resolves the root, so a read that lost its root to GC moves to
+    * the current version instead of failing the query. The returned
+    * DataFrame is lazy and pins that root; its files are immutable and
+    * outlive the plan by the GC age floor ([[IndexVersions]]). */
   def topK(spark: SparkSession, path: String, queries: DataFrame,
            idCol: String, vecCol: String, k: Int, nProbe: Int = 4,
            roundTo: Int = 4, maxBroadcastQueries: Long = 100000L,
@@ -549,17 +458,20 @@ object IvfIndex {
     // and sqstats all come from the same immutable root, so a concurrent
     // retrain can neither invalidate this plan nor mix versions
     // (IndexVersionsSpec races probes against retrains to prove it)
-    val root = retryThroughSwap(IndexVersions.currentRoot(spark, path))
-    val cents = retryThroughSwap(centroidsFor(spark, root))
-    // the unfiltered serve never reads attr columns, so it skips the meta
-    // open; a filtered serve reads meta FIRST (retried — r15 ADVICE: this
-    // read raced in-place meta rewrites; meta is append-only now AND the
-    // read retries through version-flip windows) and pins the recorded
-    // partition-attr types so directory-name inference never shifts them
-    lazy val meta = retryThroughSwap(readMetaFull(spark, root))
-    val tree = predicate match {
-      case None => retryThroughSwap(spark.read.parquet(s"$root/vectors"))
-      case Some(_) => retryThroughSwap(readVectors(spark, root, meta.partSchema))
+    val (cents, tree, meta, sqStats) = IndexVersions.retryTransient {
+      val root = IndexVersions.currentRoot(spark, path)
+      val cents = MetaCache.cached(spark, s"$root/centroids") {
+        loadCentroids(spark, root)
+      }
+      // the unfiltered serve never reads attr columns, so it skips the
+      // meta open; a filtered serve reads meta FIRST and pins the recorded
+      // partition-attr types so directory-name inference never shifts them
+      val meta = predicate.map(_ => readMetaFull(spark, root))
+      val tree = meta.fold(spark.read.parquet(s"$root/vectors"))(m =>
+        readVectors(spark, root, m.partSchema))
+      val sqStats =
+        if (codecOf(tree) == "sq8") Some(loadSqStats(spark, root)) else None
+      (cents, tree, meta, sqStats)
     }
     // the tree stores the id column as `id`; let the predicate reference
     // it by the CALLER's idCol name (the natural spelling — probe-found
@@ -571,18 +483,20 @@ object IvfIndex {
         tree.withColumnRenamed("id", idCol).filter(p)
           .withColumnRenamed(idCol, "id")
       else tree.filter(p)
-    def score0(df: DataFrame): Column =
-      if (codecOf(df) == "sq8") {
-        val stats = retryThroughSwap(loadSqStats(spark, root))
-        Quantize.sqCosine(col("qv"), col("codes"), stats)
-      } else Similarity.cosine(col("qv"), col("cv"))
-    val (effProbe, filteredTree) = predicate match {
+    // sq8 index: score straight off the codes with the decode-fused ADC
+    // kernel — the scan reads the ~4x-smaller codes column and no decoded
+    // array is ever materialized
+    val score = sqStats match {
+      case Some(stats) => Quantize.sqCosine(col("qv"), col("codes"), stats)
+      case None => Similarity.cosine(col("qv"), col("cv"))
+    }
+    val (effProbe, filteredTree) = predicate.zip(meta) match {
       case None => (nProbe, tree)
-      case Some(p) =>
+      case Some((p, m)) =>
         // total from the index meta (built+appended counters — one tiny
         // parquet row, zero scans of the tree); only the KEPT count needs
         // an attr-column scan
-        val total = meta.built + meta.appended
+        val total = m.built + m.appended
         val filtered = applyPred(p)
         val kept = filtered.count()
         // LAZY (r19, guide §1.2 — the filtered-serve twin of the r18
@@ -611,7 +525,7 @@ object IvfIndex {
             .repartition(spark.sessionState.conf.numShufflePartitions)
             .join(broadcast(qb), col("q_id") =!= col("id"))
             .select(col("q_id"), col("id").as("c_id"),
-              round(score0(filtered), roundTo).as("cos"))
+              round(score, roundTo).as("cos"))
           return Similarity.topKPerQuery(scored, k)
         }
         if (kept <= (bruteCutoff * total).toLong && kept <= maxBroadcastQueries) {
@@ -623,7 +537,7 @@ object IvfIndex {
               transform(col(vecCol), _.cast("double")).as("qv"))
           val scored = qb.join(broadcast(filtered), col("q_id") =!= col("id"))
             .select(col("q_id"), col("id").as("c_id"),
-              round(score0(filtered), roundTo).as("cos"))
+              round(score, roundTo).as("cos"))
           return Similarity.topKPerQuery(scored, k)
         }
         if (kept <= (bruteCutoff * total).toLong)
@@ -670,10 +584,6 @@ object IvfIndex {
       if (smallQuerySide)
         (graft.engine.Parallelism.spread(pruned), broadcast(q))
       else (pruned, q.hint("shuffle_hash"))
-    // sq8 index: score straight off the codes with the decode-fused ADC
-    // kernel — the scan reads the ~4x-smaller codes column and no decoded
-    // array is ever materialized
-    val score = score0(pruned)
     // no distinct ((q_id, c_id) unique by construction — one cluster per
     // vector, distinct probed cids per query) and no window: the k-capped
     // aggregate keeps rank cost bounded even when a list degenerates

@@ -2,29 +2,32 @@ package graft.pipeline
 
 import org.apache.spark.sql.SparkSession
 
-/** Stamp-keyed in-process cache for the tiny `<root>/meta` parquet reads
-  * on the index serve paths (r19, guide §1.2 — the meta-read twin of the
-  * r18 centroid cache): every MinhashIndex probe paid a one-row Spark job
-  * (parquet footer + head()) for parameters that change only when a
-  * maintenance write lands.
+/** Stamp-keyed in-process cache for the small trees the index serve paths
+  * read per plan (r19): `<root>/meta` parquet and IVF's
+  * `<root>/centroids` — every probe paid a Spark job (parquet footer +
+  * collect) for values that change only when a write lands.
   *
-  * Unlike centroids, meta MUTATES within a version (append bumps the doc
-  * count in place), so the key cannot be the commit marker: it is the
-  * DIRECTORY LISTING of the meta tree — Spark's overwrite writes fresh
+  * The key is the DIRECTORY LISTING of the tree, not the version root:
+  * meta MUTATES within a version (append bumps a count in place), and a
+  * DROP + re-CREATE recycles the same `v=N` root. Spark writes fresh
   * UUID-named part files every time, so the sorted (name, length, mtime)
-  * tuple list is unique per write, at any mtime resolution. One driver-side
-  * FS listing replaces one Spark job per serve; a listing failure (version
-  * flip mid-probe) falls through to the uncached read, which carries its
-  * own retry.
+  * tuple list is unique per write, at any mtime resolution. One
+  * driver-side FS listing replaces one Spark job per serve; a listing
+  * failure (version flip mid-probe) falls through to the uncached read,
+  * which the caller retries.
   *
-  * Bounded LRU (256 entries, each a few-field case class) — appends retire
-  * old stamps, so an unbounded map would grow with ingest history. */
+  * Bounded LRU (256 entries) of soft references — appends retire old
+  * stamps, so an unbounded map would grow with ingest history, and a
+  * centroid set can reach [[Similarity.MaxCentroidCells]] doubles (32 MB),
+  * so entries also yield under memory pressure. */
 private[pipeline] object MetaCache {
 
   private val cache =
-    new java.util.LinkedHashMap[(String, String), AnyRef](16, 0.75f, true) {
+    new java.util.LinkedHashMap[(String, String),
+        java.lang.ref.SoftReference[AnyRef]](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), AnyRef]): Boolean =
+          e: java.util.Map.Entry[(String, String),
+            java.lang.ref.SoftReference[AnyRef]]): Boolean =
         size() > 256
     }
 
@@ -48,10 +51,10 @@ private[pipeline] object MetaCache {
     if (st == null) load
     else {
       val key = (dir, st)
-      val hit = cache.synchronized(Option(cache.get(key)))
+      val hit = cache.synchronized(Option(cache.get(key)).flatMap(r => Option(r.get)))
       hit.getOrElse {
         val v = load
-        cache.synchronized(cache.put(key, v))
+        cache.synchronized(cache.put(key, new java.lang.ref.SoftReference[AnyRef](v)))
         v
       }.asInstanceOf[A]
     }

@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   */
 object MinhashIndex {
 
-  /** The data subtrees a version of this index owns (see
+  /** The payload subtrees a version of this index owns (see
     * [[IndexVersions]] — also the legacy-root GC list). */
-  private[pipeline] val DataDirs = Seq("buckets", "meta", "applied")
+  private[pipeline] val DataDirs = Seq("buckets", "meta")
 
   /** The CURRENT version's data root — where `buckets`/`meta`/`applied`
     * live right now. Public for tests/probes that inspect the physical
@@ -54,9 +54,7 @@ object MinhashIndex {
             corpusSize: Long = -1L): Unit = {
     require(k % bands == 0, "bands must divide k")
     val spark = corpus.sparkSession
-    WriterLock.withLock(spark, path) {
-      val prevRoot = IndexVersions.currentRoot(spark, path)
-      val root = IndexVersions.stage(spark, path)
+    IndexVersions.replace(spark, path, DataDirs) { (_, root) =>
       val n = if (corpusSize > 0) corpusSize else corpus.count()
       val rows = Dedup.bandRows(
         Dedup.minhashSignatures(corpus, textCol, idCol, shingleN, k), k, bands)
@@ -70,14 +68,8 @@ object MinhashIndex {
         .write.mode("overwrite").option("compression", "zstd")
         .partitionBy("ingest").parquet(s"$root/buckets")
       writeMeta(spark, root, shingleN, k, bands, n)
-      // a re-build over an existing index preserves its applied markers
-      // (the pre-versioned layout left <path>/applied untouched)
-      IngestMarkers.copyApplied(spark, prevRoot, root)
-      IndexVersions.commit(spark, path, root, DataDirs)
     }
   }
-
-  private def sanitizeTag(t: String): String = IngestMarkers.sanitizeTag(t)
 
   /** Add accepted docs to the index (after their batch passed the dedup
     * gate): sketch with the SAVED parameters, write into the ingest
@@ -92,8 +84,8 @@ object MinhashIndex {
   def append(newDocs: DataFrame, textCol: String, idCol: String,
              path: String, batchSize: Long = -1L,
              tag: String = null): Long =
-    WriterLock.withLock(newDocs.sparkSession, path) {
-      appendLocked(newDocs, textCol, idCol, path, batchSize, tag, None)
+    IndexVersions.inPlace(newDocs.sparkSession, path) { root =>
+      appendLocked(newDocs, textCol, idCol, root, batchSize, tag, None)
     }
 
   /** Append + applied-marker write as ONE locked operation — the
@@ -104,18 +96,17 @@ object MinhashIndex {
   def appendApplied(newDocs: DataFrame, textCol: String, idCol: String,
                     path: String, tag: String,
                     survivorIds: DataFrame): Long =
-    WriterLock.withLock(newDocs.sparkSession, path) {
-      appendLocked(newDocs, textCol, idCol, path, -1L, tag, Some(survivorIds))
+    IndexVersions.inPlace(newDocs.sparkSession, path) { root =>
+      appendLocked(newDocs, textCol, idCol, root, -1L, tag, Some(survivorIds))
     }
 
   private def appendLocked(newDocs: DataFrame, textCol: String, idCol: String,
-                           path: String, batchSize: Long, tag: String,
+                           root: String, batchSize: Long, tag: String,
                            markerIds: Option[DataFrame]): Long = {
     val spark = newDocs.sparkSession
-    val root = IndexVersions.writeRoot(spark, path)
     val m = readMetaAt(spark, root)
     val add = if (batchSize > 0) batchSize else newDocs.count()
-    val t = sanitizeTag(Option(tag).getOrElse(defaultTag(spark, root, "buckets")))
+    val t = IngestMarkers.sanitizeTag(Option(tag).getOrElse(defaultTag(spark, root, "buckets")))
     // size the ingest's files to the BATCH, not the session width: a
     // small micro-batch writes one compact file, not 32 slivers (the
     // accumulated-small-files pressure is then bounded by batch count,
@@ -172,8 +163,7 @@ object MinhashIndex {
     * previous version (the grace version, GC'd only by the NEXT
     * maintenance write), new plans resolve to the compacted one. */
   def compact(spark: SparkSession, path: String): Unit =
-    WriterLock.withLock(spark, path) {
-      val root = IndexVersions.currentRoot(spark, path)
+    IndexVersions.replace(spark, path, DataDirs) { (root, staged) =>
       val m = readMetaAt(spark, root)
       // "marked" = the marker's _SUCCESS exists, matching appliedMarker's
       // definition (r14 ADVICE): a half-written marker dir from a crash
@@ -184,7 +174,6 @@ object MinhashIndex {
       val all = spark.read.parquet(s"$root/buckets")
       val foldable = col("ingest") === "base" ||
         col("ingest").isin(markedTags: _*)
-      val staged = IndexVersions.stage(spark, path)
       val nPart = Dedup.verifyPartitions(math.max(m.nDocs, 1L) * m.bands,
         spark.sessionState.conf.numShufflePartitions, 125000L)
       all.filter(foldable)
@@ -201,8 +190,6 @@ object MinhashIndex {
       val nDocs = spark.read.parquet(s"$staged/buckets")
         .select("id").distinct().count()
       writeMeta(spark, staged, m.shingleN, m.k, m.bands, nDocs)
-      IngestMarkers.copyApplied(spark, root, staged)
-      IndexVersions.commit(spark, path, staged, DataDirs)
     }
 
   /** Read the surviving ids recorded for an applied ingest `tag`, or None
@@ -270,9 +257,10 @@ object MinhashIndex {
     // independent resolutions could sketch the batch with the new meta's
     // parameters and join it against the old version's buckets — the
     // bucket spaces are incomparable and candidates silently vanish)
-    val root = retryTransient(IndexVersions.currentRoot(spark, path))
-    val m = readMetaAt(spark, root)
-    val idx = retryTransient(spark.read.parquet(s"$root/buckets"))
+    val (m, idx) = IndexVersions.retryTransient {
+      val root = IndexVersions.currentRoot(spark, path)
+      (readMetaAt(spark, root), spark.read.parquet(s"$root/buckets"))
+    }
     val nPart =
       if (batchSize > 0)
         Dedup.verifyPartitions(m.bands.toLong * math.max(batchSize, m.nDocs),
@@ -322,22 +310,26 @@ object MinhashIndex {
     batch.join(hits, col(idCol) === col("__dup"), "left_anti")
   }
 
-  private def retryTransient[T](f: => T): T = IngestMarkers.retryTransient(f)
-
   final case class Meta(shingleN: Int, k: Int, bands: Int, nDocs: Long)
 
-  /** `root` is a RESOLVED data root (a version dir or the legacy path). */
+  /** `root` is a RESOLVED data root (a version dir or the legacy path).
+    * Meta rows are APPEND-ONLY within a version, as IVF's are: Spark's
+    * overwrite deletes the tree before it writes, so a fault between the
+    * two left an append's version with no meta, and every probe of it
+    * failed (IndexFaultSpec). `n_docs` only grows within a version, so
+    * readers take the row with the largest. */
   private def writeMeta(spark: SparkSession, root: String,
                         shingleN: Int, k: Int, bands: Int, n: Long): Unit = {
     import spark.implicits._
     Seq((shingleN, k, bands, n))
       .toDF("shingle_n", "k", "bands", "n_docs")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+      .coalesce(1).write.mode("append").parquet(s"$root/meta")
   }
 
-  def readMeta(spark: SparkSession, path: String): Meta = retryTransient {
-    readMetaAt(spark, IndexVersions.currentRoot(spark, path))
-  }
+  def readMeta(spark: SparkSession, path: String): Meta =
+    IndexVersions.retryTransient {
+      readMetaAt(spark, IndexVersions.currentRoot(spark, path))
+    }
 
   /** Meta from a RESOLVED root — pair with a buckets read of the SAME
     * root so a plan never mixes versions. Stamp-cached (r19, see
@@ -345,9 +337,7 @@ object MinhashIndex {
     * for parameters that change only on maintenance writes. */
   private def readMetaAt(spark: SparkSession, root: String): Meta =
     MetaCache.cached(spark, s"$root/meta") {
-      retryTransient {
-        val r = spark.read.parquet(s"$root/meta").head()
-        Meta(r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
-      }
+      val r = spark.read.parquet(s"$root/meta").orderBy(col("n_docs").desc).head()
+      Meta(r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
     }
 }

@@ -6,9 +6,11 @@ import org.apache.spark.sql.SparkSession
   * `<path>.lock` file serializes writers (build/append/retrain) against
   * each other (r10 ADVICE: an append's read-meta/write-meta could
   * interleave with a concurrent rebuild's swap and lose appended counts,
-  * or write meta into a swapped-out tree). Reads take no lock — probe
-  * paths retry through rename windows instead. Waits up to `waitMs` for a
-  * competing writer, then fails rather than proceeding unserialized.
+  * or write meta into a swapped-out tree). Reads take no lock — a probe
+  * pins one committed [[IndexVersions]] root per plan and retries its
+  * planning reads through [[IndexVersions.retryTransient]]. Waits up to
+  * `waitMs` for a competing writer, then fails rather than proceeding
+  * unserialized.
   *
   * Liveness (r16, r15 verdict #3): the lock is a LEASE, not a tombstone.
   * The holder heartbeats the lock file's mtime every leaseMs/3 while the

@@ -1,19 +1,6 @@
 package graft.pipeline
 
 import graft.SparkTestBase
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
-
-/** A local file system whose directory listing fails with an unchecked
-  * exception, the way some FileSystem implementations surface faults. */
-class ListFailingFileSystem extends RawLocalFileSystem {
-  override def getScheme: String = ListFailingFileSystem.Scheme
-  override def listStatus(p: Path): Array[FileStatus] =
-    throw new IllegalStateException(s"injected listing fault at $p")
-}
-
-object ListFailingFileSystem {
-  val Scheme = "graftlistfail"
-}
 
 /** Failure paths of the serve-side helpers: a listing fault must fall
   * through to the uncached load, and a metric wait must be bounded
@@ -21,20 +8,23 @@ object ListFailingFileSystem {
 class ServeFaultSpec extends SparkTestBase {
 
   test("MetaCache: a non-IO listing failure falls through to the uncached load") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val key = s"fs.${ListFailingFileSystem.Scheme}.impl"
-    conf.set(key, classOf[ListFailingFileSystem].getName)
-    conf.setBoolean(s"fs.${ListFailingFileSystem.Scheme}.impl.disable.cache", true)
-    try {
-      val dir = s"${ListFailingFileSystem.Scheme}:///tmp/graft_meta_fault/meta"
+    FaultFileSystem.withScheme(spark.sparkContext.hadoopConfiguration) {
+      val dir = s"${FaultFileSystem.Scheme}:///tmp/graft_meta_fault/meta"
       var loads = 0
       def load(): String = { loads += 1; s"loaded-$loads" }
-      assert(MetaCache.cached(spark, dir)(load()) == "loaded-1")
+      // the listing throws an unchecked exception, the way some
+      // FileSystem implementations surface faults
+      def failingListing = FaultFileSystem.Plan("listStatus", 1, _ => true,
+        new IllegalStateException(_))
+      def cachedUnderFault(): String = {
+        val (out, fired) =
+          FaultFileSystem.inject(failingListing)(MetaCache.cached(spark, dir)(load()))
+        assert(fired, "the listing fault must fire")
+        out.get
+      }
+      assert(cachedUnderFault() == "loaded-1")
       // no stamp, so nothing is cached: every call takes the load again
-      assert(MetaCache.cached(spark, dir)(load()) == "loaded-2")
-    } finally {
-      conf.unset(key)
-      conf.unset(s"fs.${ListFailingFileSystem.Scheme}.impl.disable.cache")
+      assert(cachedUnderFault() == "loaded-2")
     }
   }
 
