@@ -10,7 +10,12 @@ import graft.functions.GridDbScalarFunctions
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or via
   * `spark.sql.extensions=graft.engine.GraftExtensions` — the deployment
   * shape for a shared cluster, where the session is created by the platform
-  * rather than by graft code. */
+  * rather than by graft code.
+  *
+  * A `spark.sql.extensions` deployment must also set
+  * `spark.sql.codegen.cache.maxEntries` in its own Spark conf (see
+  * [[GraftSession.configure]]): it is a static conf, read once when the
+  * JVM-wide codegen cache is first used, so an extension cannot set it. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GridDbScalarFunctions.builders.foreach { case (name, builder) =>
@@ -36,5 +41,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SQL:2011 grand-total row for ROLLUP/CUBE over empty input (post-hoc:
     // runs once, after grouping sets are lowered to Aggregate-over-Expand)
     e.injectPostHocResolutionRule(_ => RollupEmptyGlobalRow)
+    // per-statement constants become generated-code parameters just before
+    // CollapseCodegenStages, so statements that differ only in constants
+    // reuse compiled classes
+    e.injectColumnar(_ => BindConstantsColumnarRule)
   }
 }

@@ -19,7 +19,8 @@ import org.apache.spark.sql.functions._
   *    keep-min replay rule can tell "my own appended copy" from a genuine
   *    corpus duplicate. Partitioned by an `ingest` tag (`base` + one per
   *    append); a re-written tag REPLACES its rows — replay-idempotent.
-  *  - `<path>/meta`: (n_docs) — always EXACTLY the stored digest rows.
+  *  - `<path>/meta`: (n_docs) — EXACTLY the stored digest rows; one row
+  *    per meta write, append-only within a version (see [[writeMeta]]).
   *  - `<path>/tagmeta`: (tag, n_rows) per ingest partition (r17, r16
   *    verdict #6) — appends footer-count ONLY the tag they wrote and sum
   *    the rest from here (one directory listed instead of the whole
@@ -269,11 +270,16 @@ object ExactIndex {
 
   final case class Meta(nDocs: Long)
 
-  /** `root` is a RESOLVED data root (a version dir or the legacy path). */
+  /** `root` is a RESOLVED data root (a version dir or the legacy path).
+    * Meta rows are APPEND-ONLY within a version, as minhash's are: Spark's
+    * overwrite deletes the tree before it writes, so a fault between the
+    * two left an append's version with no meta, and `readMeta` and
+    * `compact` failed until the append was retried (IndexFaultSpec).
+    * `n_docs` only grows within a version, so readers take the largest. */
   private def writeMeta(spark: SparkSession, root: String, n: Long): Unit = {
     import spark.implicits._
     Seq(n).toDF("n_docs")
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/meta")
+      .coalesce(1).write.mode("append").parquet(s"$root/meta")
   }
 
   def readMeta(spark: SparkSession, path: String): Meta =
@@ -285,6 +291,6 @@ object ExactIndex {
   // one-row Spark job when the meta tree is unchanged since the last read
   private def readMetaAt(spark: SparkSession, root: String): Meta =
     MetaCache.cached(spark, s"$root/meta") {
-      Meta(spark.read.parquet(s"$root/meta").head().getLong(0))
+      Meta(spark.read.parquet(s"$root/meta").agg(max(col("n_docs"))).head().getLong(0))
     }
 }

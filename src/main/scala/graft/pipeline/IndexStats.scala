@@ -55,7 +55,7 @@ object IndexStats {
   private def metaSummary(spark: SparkSession, root: String): String =
     try {
       val df = spark.read.option("mergeSchema", "true").parquet(s"$root/meta")
-      // IVF orders its rows by meta_seq; a minhash count only grows
+      // IVF orders its rows by meta_seq; a minhash or exact count only grows
       val newest = Seq("meta_seq", "n_docs").find(df.columns.contains)
       val row = newest.fold(df.head())(c =>
         df.orderBy(org.apache.spark.sql.functions.col(c).desc_nulls_last).head())

@@ -22,7 +22,6 @@ object ProbeQ3Variance {
       graft.engine.TableStats.treeSize(sfDir), 32)
     val spark = graft.engine.GraftSession.configure(
       SparkSession.builder().master("local[32]"), shufflePartitions = width)
-      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.engine.GraftSession.prepare(spark)

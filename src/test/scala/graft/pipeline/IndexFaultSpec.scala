@@ -251,4 +251,19 @@ class IndexFaultSpec extends SparkTestBase {
   test("exact compact: old-or-new, retryable, no lease left") {
     faultable(sweep(exTemplate, exRead, ExactIndex.compact(spark, _)))
   }
+
+  test("exact append faulted in its meta write: readMeta and compact work without a retry") {
+    faultable {
+      val idx = copyOf(exTemplate)
+      val before = ExactIndex.readMeta(spark, idx)
+      val inIdx = inIndex(idx)
+      val inMeta = (p: org.apache.hadoop.fs.Path) => inIdx(p) && p.toUri.getPath.contains("/meta/")
+      val (outcome, fired) = FaultFileSystem.inject(FaultFileSystem.Plan("create", 1, inMeta))(
+        exAppend(tagged1, idx, "t1"))
+      assert(fired && outcome.isFailure, s"the meta fault did not fail the append ($outcome)")
+      assert(ExactIndex.readMeta(spark, idx) == before)
+      ExactIndex.compact(spark, idx)
+      assert(ExactIndex.readMeta(spark, idx).nDocs > 0)
+    }
+  }
 }
