@@ -1,9 +1,12 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType, TimestampType}
+import org.apache.spark.sql.graft.GraftSqlBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, MapType, StringType, StructField, StructType, TimestampType}
 
 /** Container catalog: GridDB's DDL/DML surface mapped onto Spark.
   *
@@ -17,6 +20,19 @@ import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructT
   * implemented as union + keep-latest-per-key — the MERGE pattern that scales
   * as one shuffle on the key. Data lives in temp views (tests) — the same
   * API drives partitioned parquet layouts via `PartitionedTables`.
+  *
+  * Layout: a container that fits one partition (see `onePartition`) is
+  * kept as ONE partition that Catalyst knows is one (`SinglePartition`), so
+  * DML and the IoT reads over it plan no exchange; a bigger one keeps the
+  * shuffle layout.
+  *
+  * Concurrency: writes to one container are serialized (GridDB serializes
+  * writes per container) — each DML reads the stored frame, runs its job
+  * and registers the result under the container's write lock, so two
+  * concurrent puts cannot both build on the same old frame. Triggers fire
+  * after the lock is released, so a notifier that writes another container
+  * cannot deadlock against a write going the other way. Reads take no lock;
+  * the catalog maps are synchronized like the trigger map.
   */
 /** Event-trigger definition (client surface gridstore.h GSTriggerInfo
   * :838-870: name, REST|JMS type, uri, PUT/DELETE event flags, column set,
@@ -139,57 +155,126 @@ final class GraftCatalog(spark: SparkSession) {
   def createCollection(name: String, schema: StructType,
                        keyColumns: Seq[String] = Nil): Container = {
     val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    register(Container(name, df, Collection, keyColumns, None))
+    register(Container(name, df, Collection, keyColumns, None, bytes = Some(0L)))
   }
 
   def createTimeSeries(name: String, schema: StructType,
                        timeColumn: String): Container = {
     require(schema.fieldNames.contains(timeColumn), s"missing $timeColumn")
     val df = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    register(Container(name, df, TimeSeries, Seq(timeColumn), Some(timeColumn)))
+    register(Container(name, df, TimeSeries, Seq(timeColumn), Some(timeColumn),
+      bytes = Some(0L)))
   }
 
-  def register(c: Container): Container = {
-    containers(c.name) = c
+  def register(c: Container): Container = writing(c.name) {
+    containers.synchronized { containers(c.name) = c }
     c.df.createOrReplaceTempView(c.name)
     c
   }
 
   def get(name: String): Container =
-    containers.getOrElse(name,
+    containers.synchronized { containers.get(name) }.getOrElse(
       throw new NoSuchElementException(s"container $name does not exist"))
 
-  def exists(name: String): Boolean = containers.contains(name)
+  def exists(name: String): Boolean = containers.synchronized { containers.contains(name) }
 
-  def dropContainer(name: String): Unit = {
-    containers.remove(name)
+  def dropContainer(name: String): Unit = writing(name) {
+    containers.synchronized { containers.remove(name) }
     spark.catalog.dropTempView(name)
   }
+
+  // one monitor per container name; entries are never removed, so a
+  // dropped-and-recreated container keeps serializing on the same one
+  private val writeLocks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
+
+  /** Run a read-modify-write of container `name` under its write lock
+    * (reentrant: `register` nests inside the DML that calls it). */
+  private def writing[T](name: String)(body: => T): T =
+    writeLocks.computeIfAbsent(name, _ => new Object).synchronized(body)
+
+  /** Replace container `name`'s metadata under its write lock. */
+  private[engine] def alter(name: String)(f: Container => Container): Container =
+    writing(name)(register(f(get(name))))
 
   /** Cut lineage after DML without pulling rows to the driver: an eager
     * `localCheckpoint` materializes each partition on its executor (blocks
     * stay distributed; the ContextCleaner reclaims superseded checkpoints).
+    * The same job measures the bytes it stores (an observed aggregate, read
+    * back once the job has finished: no extra job), which the next DML's
+    * layout rule reads; a result of one partition is published as
+    * `SinglePartition`, so aggregates and windows over the container plan
+    * no exchange.
     * Repeated put/update/delete therefore stack O(1) plan depth while the
     * data itself never leaves the cluster — the property the reference's
     * DMLProcessor has by writing through the chunk store
     * (/root/reference/server/sql_processor_dml.h:39). */
-  private def materialize(df: DataFrame): DataFrame = df.localCheckpoint()
+  private def materialize(c: Container, df: DataFrame): Container = {
+    val observed = df.observe(StoredBytes, storedBytes(df.schema))
+    val cp = observed.localCheckpoint()
+    c.copy(df = GraftSqlBridge.asSinglePartition(cp),
+      bytes = observed.queryExecution.observedMetrics.get(StoredBytes).map(_.getLong(0)))
+  }
+
+  private val StoredBytes = "graft_stored_bytes"
+
+  /** Aggregate: the bytes rows of `schema` take in Spark's row format — 8
+    * bytes of null bits (per 64 columns) and 8 per column, plus each string
+    * or binary value's own length, measured (Spark's row-width estimate
+    * counts any string as 20 bytes); a nested value counts its type's
+    * default size. */
+  private def storedBytes(schema: StructType): Column = {
+    val fixed = 8L * ((schema.size + 63) / 64 + schema.size)
+    val row = schema.fields.foldLeft(lit(fixed)) { (b, f) =>
+      val c = col("`" + f.name.replace("`", "``") + "`")
+      f.dataType match {
+        case _: StringType | BinaryType => b + coalesce(octet_length(c), lit(0))
+        case _: ArrayType | _: MapType | _: StructType => b + f.dataType.defaultSize
+        case _ => b
+      }
+    }
+    coalesce(sum(row), lit(0L))
+  }
+
+  /** The layout rule: `c` stays ONE partition while its stored bytes, plus
+    * the incoming batch's estimated size, fit the size up to which AQE
+    * itself coalesces a shuffle's output into one partition:
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` (1 MB) under
+    * the default `parallelismFirst`, which spreads anything bigger across
+    * the cores, else the larger of that and
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. Inside it the
+    * shuffle path would end in one partition anyway, so the one-partition
+    * path gives up no parallelism after its merge. An unmeasured container,
+    * or a batch whose size Spark cannot estimate, keeps the shuffle path.
+    * Inside the budget DML gathers its input with a no-shuffle
+    * `coalesce(1)`. */
+  private def onePartition(c: Container, df: DataFrame,
+                           incoming: Option[DataFrame] = None): DataFrame = {
+    def bytesConf(key: String) = JavaUtils.byteStringAsBytes(spark.conf.get(key))
+    val minSize = bytesConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE.key)
+    val budget =
+      if (spark.conf.get(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST.key).toBoolean) minSize
+      else minSize max bytesConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key)
+    val batch = incoming.fold(BigInt(0))(_.queryExecution.analyzed.stats.sizeInBytes)
+    if (c.bytes.exists(b => BigInt(b) + batch <= budget)) df.coalesce(1) else df
+  }
 
   /** INSERT OR REPLACE by row key (PUT semantics). Rows with keys already
     * present replace the stored rows; unkeyed containers append. */
   def put(name: String, rows: DataFrame): Container = {
-    val c = get(name)
-    val merged =
-      if (c.keyColumns.isEmpty) c.df.unionByName(rows)
-      else {
-        val tagged = c.df.withColumn("__gen", lit(0))
-          .unionByName(rows.withColumn("__gen", lit(1)))
-        val w = Window.partitionBy(c.keyColumns.map(col): _*)
-          .orderBy(col("__gen").desc)
-        tagged.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__gen", "__rn")
-      }
-    val out = register(c.copy(df = materialize(merged)))
+    val out = writing(name) {
+      val c = get(name)
+      val merged =
+        if (c.keyColumns.isEmpty) onePartition(c, c.df.unionByName(rows), Some(rows))
+        else {
+          val tagged = onePartition(c, c.df.withColumn("__gen", lit(0))
+            .unionByName(rows.withColumn("__gen", lit(1))), Some(rows))
+          val w = Window.partitionBy(c.keyColumns.map(col): _*)
+            .orderBy(col("__gen").desc)
+          tagged.withColumn("__rn", row_number().over(w))
+            .filter(col("__rn") === 1).drop("__gen", "__rn")
+        }
+      register(materialize(c, merged))
+    }
     fireTriggers(name, "PUT", rows)
     out
   }
@@ -424,12 +509,13 @@ final class GraftCatalog(spark: SparkSession) {
 
   /** DELETE by key (REMOVE semantics). */
   def remove(name: String, keyValues: Seq[Any]): Container = {
-    val c = get(name)
-    require(c.keyColumns.nonEmpty, s"$name has no row key")
-    val cond = c.keyColumns.zip(keyValues)
-      .map { case (k, v) => col(k) === lit(v) }.reduce(_ && _)
-    val removed = c.df.filter(cond)
-    val out = register(c.copy(df = materialize(c.df.filter(!cond))))
+    val (out, removed) = writing(name) {
+      val c = get(name)
+      require(c.keyColumns.nonEmpty, s"$name has no row key")
+      val cond = c.keyColumns.zip(keyValues)
+        .map { case (k, v) => col(k) === lit(v) }.reduce(_ && _)
+      (register(materialize(c, onePartition(c, c.df.filter(!cond)))), c.df.filter(cond))
+    }
     fireTriggers(name, "DELETE", removed)
     out
   }
@@ -438,19 +524,21 @@ final class GraftCatalog(spark: SparkSession) {
     * /root/reference/server/sql_processor_dml.h:39): assignments applied to
     * matching rows, others untouched. */
   def update(name: String, assignments: Map[String, org.apache.spark.sql.Column],
-             where: org.apache.spark.sql.Column): Container = {
+             where: org.apache.spark.sql.Column): Container = writing(name) {
     val c = get(name)
     val updated = assignments.foldLeft(c.df) { case (d, (colName, v)) =>
       d.withColumn(colName, when(where, v).otherwise(col(colName)))
     }
-    register(c.copy(df = materialize(updated)))
+    register(materialize(c, onePartition(c, updated)))
   }
 
   /** SQL DELETE ... WHERE. */
   def deleteWhere(name: String, where: org.apache.spark.sql.Column): Container = {
-    val c = get(name)
-    val removed = c.df.filter(coalesce(where, lit(false)))
-    val out = register(c.copy(df = materialize(c.df.filter(!coalesce(where, lit(false))))))
+    val hit = coalesce(where, lit(false))
+    val (out, removed) = writing(name) {
+      val c = get(name)
+      (register(materialize(c, onePartition(c, c.df.filter(!hit)))), c.df.filter(hit))
+    }
     fireTriggers(name, "DELETE", removed)
     out
   }
@@ -470,7 +558,7 @@ final class GraftCatalog(spark: SparkSession) {
     * expiring container — this is an admin operation, not a query path. */
   def expireNow(nowMs: Long): DataFrame = {
     import spark.implicits._
-    val report = containers.values.toSeq.flatMap { c =>
+    val report = containers.synchronized { containers.values.toSeq }.flatMap { c =>
       c.expiration.map { e =>
         // epoch-ms view of a time column; integer div for nanos — epoch ns
         // (~1.7e18) is past double's 2^53 exact range, so double division
@@ -519,38 +607,39 @@ final class GraftCatalog(spark: SparkSession) {
     * see NULL for the new column — the reference's fixed-null fill for
     * columns appended after rows were stored. */
   def alterAddColumn(name: String, column: String,
-                     dataType: org.apache.spark.sql.types.DataType): Container = {
-    val c = get(name)
-    require(!c.df.columns.map(_.toLowerCase).contains(column.toLowerCase),
-      s"$name: column $column already exists")
-    register(c.copy(df = c.df.withColumn(column, lit(null).cast(dataType))))
-  }
+                     dataType: org.apache.spark.sql.types.DataType): Container =
+    alter(name) { c =>
+      require(!c.df.columns.map(_.toLowerCase).contains(column.toLowerCase),
+        s"$name: column $column already exists")
+      c.copy(df = c.df.withColumn(column, lit(null).cast(dataType)))
+    }
 
   /** ALTER TABLE name RENAME COLUMN a TO b (grammar rules 107-109,
     * /root/reference/server/sql_internal_parser.cpp:942-943). Key/time
     * metadata follows the rename. */
-  def alterRenameColumn(name: String, from: String, to: String): Container = {
-    val c = get(name)
-    require(c.df.columns.contains(from), s"$name: no column $from")
-    require(!c.df.columns.map(_.toLowerCase).contains(to.toLowerCase),
-      s"$name: column $to already exists")
-    register(c.copy(
-      df = c.df.withColumnRenamed(from, to),
-      keyColumns = c.keyColumns.map(k => if (k == from) to else k),
-      timeColumn = c.timeColumn.map(t => if (t == from) to else t)))
-  }
+  def alterRenameColumn(name: String, from: String, to: String): Container =
+    alter(name) { c =>
+      require(c.df.columns.contains(from), s"$name: no column $from")
+      require(!c.df.columns.map(_.toLowerCase).contains(to.toLowerCase),
+        s"$name: column $to already exists")
+      c.copy(
+        df = c.df.withColumnRenamed(from, to),
+        keyColumns = c.keyColumns.map(k => if (k == from) to else k),
+        timeColumn = c.timeColumn.map(t => if (t == from) to else t))
+    }
 
   /** CREATE [OR REPLACE] VIEW name AS <sql> (grammar rule 74). */
   def createView(name: String, sql: String): Unit = {
     spark.sql(sql).createOrReplaceTempView(name)
-    views(name) = sql
+    views.synchronized { views(name) = sql }
   }
 
   /** Record a view definition created through another path (SQL-text DDL). */
   private[engine] def recordView(name: String, sql: String): Unit =
-    views(name) = sql
+    views.synchronized { views(name) = sql }
 
-  private[engine] def dropView(name: String): Unit = views.remove(name)
+  private[engine] def dropView(name: String): Unit =
+    views.synchronized { views.remove(name) }
 
   /** CREATE INDEX name ON table (cols) (grammar rule 91,
     * /root/reference/server/sql_internal_parser.cpp:925). Advisory: Spark
@@ -561,18 +650,21 @@ final class GraftCatalog(spark: SparkSession) {
     val c = get(table)
     columns.foreach(cn => require(c.df.columns.contains(cn),
       s"$table has no column $cn"))
-    require(!indexes.contains(indexName), s"index $indexName already exists")
-    indexes(indexName) = (table, columns)
+    indexes.synchronized {
+      require(!indexes.contains(indexName), s"index $indexName already exists")
+      indexes(indexName) = (table, columns)
+    }
   }
 
   /** DROP INDEX name [ON table] (grammar rules 99-100). */
   def dropIndex(indexName: String, ifExists: Boolean = false): Unit =
-    if (indexes.remove(indexName).isEmpty && !ifExists)
+    if (indexes.synchronized { indexes.remove(indexName) }.isEmpty && !ifExists)
       throw new NoSuchElementException(s"index $indexName does not exist")
 
   /** Table an index is attached to, if recorded — lets the auth gate
     * resolve `DROP INDEX ix` (no ON clause) to its protected table. */
-  def indexTable(indexName: String): Option[String] = indexes.get(indexName).map(_._1)
+  def indexTable(indexName: String): Option[String] =
+    indexes.synchronized { indexes.get(indexName) }.map(_._1)
 
   /** Table a trigger fires on, if recorded (auth gating of DROP TRIGGER). */
   def triggerTable(triggerName: String): Option[String] =
@@ -673,7 +765,7 @@ final class GraftCatalog(spark: SparkSession) {
     * there, meta_store.cpp:2754). */
   def metaTables: DataFrame = {
     import spark.implicits._
-    containers.values.toSeq.map { c =>
+    containers.synchronized { containers.values.toSeq }.map { c =>
       (c.name,
         c.kind match { case TimeSeries => "TIMESERIES"; case Collection => "COLLECTION" },
         c.keyColumns.mkString(","), c.timeColumn.orNull,
@@ -691,7 +783,7 @@ final class GraftCatalog(spark: SparkSession) {
   /** Metadata table `#columns` (meta_type.h TYPE_COLUMN). */
   def metaColumns: DataFrame = {
     import spark.implicits._
-    containers.values.toSeq.flatMap { c =>
+    containers.synchronized { containers.values.toSeq }.flatMap { c =>
       c.df.schema.fields.zipWithIndex.map { case (f, i) =>
         (c.name, i, f.name, GridDbTypes.fromSpark(f.dataType), f.nullable,
           c.keyColumns.contains(f.name))
@@ -702,7 +794,7 @@ final class GraftCatalog(spark: SparkSession) {
   /** Metadata table `#primary_keys` (meta_type.h TYPE_KEY). */
   def metaPrimaryKeys: DataFrame = {
     import spark.implicits._
-    containers.values.toSeq.flatMap { c =>
+    containers.synchronized { containers.values.toSeq }.flatMap { c =>
       c.keyColumns.zipWithIndex.map { case (k, i) => (c.name, k, i + 1) }
     }.toDF("TABLE_NAME", "COLUMN_NAME", "KEY_SEQ")
   }
@@ -710,7 +802,7 @@ final class GraftCatalog(spark: SparkSession) {
   /** Metadata table `#index_info` (meta_type.h TYPE_INDEX). */
   def metaIndexInfo: DataFrame = {
     import spark.implicits._
-    indexes.toSeq.flatMap { case (ix, (table, cols)) =>
+    indexes.synchronized { indexes.toSeq }.flatMap { case (ix, (table, cols)) =>
       cols.zipWithIndex.map { case (cn, i) => (table, ix, cn, i + 1) }
     }.toDF("TABLE_NAME", "INDEX_NAME", "COLUMN_NAME", "ORDINAL")
   }
@@ -718,7 +810,7 @@ final class GraftCatalog(spark: SparkSession) {
   /** Metadata table `#views` (meta_type.h TYPE_VIEW). */
   def metaViews: DataFrame = {
     import spark.implicits._
-    views.toSeq.toDF("VIEW_NAME", "VIEW_DEFINITION")
+    views.synchronized { views.toSeq }.toDF("VIEW_NAME", "VIEW_DEFINITION")
   }
 
   /** Metadata table `#table_partitions` (meta_type.h TYPE_PARTITION;
@@ -727,7 +819,7 @@ final class GraftCatalog(spark: SparkSession) {
     * /root/reference/server/meta_store.cpp:830-831). */
   def metaTablePartitions: DataFrame = {
     import spark.implicits._
-    containers.values.toSeq.flatMap { c =>
+    containers.synchronized { containers.values.toSeq }.flatMap { c =>
       val exp = c.expiration.map(_.expirationType).orNull
       c.partitioning.map {
         case PartitionedTables.Hash(pc, n) =>
@@ -788,5 +880,5 @@ final class GraftCatalog(spark: SparkSession) {
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 
-  def listContainers: Seq[String] = containers.keys.toSeq
+  def listContainers: Seq[String] = containers.synchronized { containers.keys.toSeq }
 }

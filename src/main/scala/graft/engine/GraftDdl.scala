@@ -423,7 +423,7 @@ object GraftDdl {
     // key-only flag missed Collection partition expiry on a nano column)
     val nanoSet = nanoCols.result().toSet
     if (partitioning.isDefined || expiration.isDefined || hints.nonEmpty || nanoSet.nonEmpty)
-      cat.register(cat.get(name).copy(
+      cat.alter(name)(_.copy(
         partitioning = partitioning, expiration = expiration,
         placementHints = hints, nanoColumns = nanoSet))
     status(spark, "CREATE TABLE", name)

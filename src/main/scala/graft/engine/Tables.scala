@@ -60,7 +60,11 @@ final case class Container(
     // ms. Time arithmetic (TTL expiry) consults this per column — the
     // expiry column may be the key (ROW) or the partition column
     // (PARTITION), on either container kind
-    nanoColumns: Set[String] = Set.empty)
+    nanoColumns: Set[String] = Set.empty,
+    // bytes the frame held when the catalog last wrote it, measured on that
+    // write's own job; None = unknown (the catalog's layout rule then keeps
+    // the shuffle path)
+    bytes: Option[Long] = None)
 
 /** Loader / catalog for the driver-provided TESTDATA star schema.
   *

@@ -106,10 +106,11 @@ object TqlCompiler {
       case ColRef(n) => n
       case other => throw new TqlParseException(s"expected column, got $other")
     }
-    def tsArg(i: Int): Column = arg(i) match {
-      case TsLit(us) => timestamp_micros(lit(us))
+    def usArg(i: Int): Long = arg(i) match {
+      case TsLit(us) => us
       case other => throw new TqlParseException(s"expected TIMESTAMP(), got $other")
     }
+    def tsArg(i: Int): Column = timestamp_micros(lit(usArg(i)))
 
     f.name match {
       // ---- aggregations (server/aggregation_func.h:918-930) ----
@@ -144,15 +145,14 @@ object TqlCompiler {
           case NumLit(v, _) => v.toLong
           case other => throw new TqlParseException(s"expected number, got $other")
         }
-        if (f.star)
-          // drop the loader's `<ts>_ns` NanoTimestamp twin: `*` carries the
-          // row's DATA columns onto the grid, not the key's nanos alias
-          TimeSeriesOps.timeSamplingHold(
-            df.drop(s"${tsCol(container)}_ns"), tsCol(container),
-            tsArg(base), tsArg(base + 1), n * unitUs)
-        else
-          TimeSeriesOps.timeSampling(df, tsCol(container), argName(0),
-            tsArg(1), tsArg(2), n * unitUs)
+        // the bounds go through as the literals' micros: the sampler needs
+        // no constant folding of the bound Columns to size its grid.
+        // Star: drop the loader's `<ts>_ns` NanoTimestamp twin — `*` carries
+        // the row's DATA columns onto the grid, not the key's nanos alias
+        TimeSeriesOps.sample(
+          if (f.star) df.drop(s"${tsCol(container)}_ns") else df, tsCol(container),
+          if (f.star) None else Some(argName(0)), tsArg(base), tsArg(base + 1),
+          n * unitUs, Nil, Some((usArg(base), usArg(base + 1))))
       case "MAX_ROWS" => TimeSeriesOps.extremeRows(df, argName(0), isMax = true)
       case "MIN_ROWS" => TimeSeriesOps.extremeRows(df, argName(0), isMax = false)
       case "TIME_WINDOW_AGG" =>
@@ -198,12 +198,8 @@ object TqlCompiler {
               throw new TqlParseException("TIME_WINDOW_AGG(*): no numeric columns")
             numeric.map(c => mkAgg(col(c), s"${aggName.toLowerCase}_$c"))
           } else Seq(mkAgg(col(argName(0)), aggName.toLowerCase))
-        def msOf(i: Int): Long = arg(i) match {
-          case TsLit(us) => us / 1000L
-          case other => throw new TqlParseException(s"expected TIMESTAMP(), got $other")
-        }
-        graft.ts.GroupByRange(df, tsCol(container), msOf(base + 1), msOf(base + 2),
-          n * unitMs, aggCols, graft.ts.GroupByRange.FillNone)
+        graft.ts.GroupByRange(df, tsCol(container), usArg(base + 1) / 1000L,
+          usArg(base + 2) / 1000L, n * unitMs, aggCols, graft.ts.GroupByRange.FillNone)
 
       case other => throw new TqlParseException(s"unknown selection/aggregation: $other")
     }

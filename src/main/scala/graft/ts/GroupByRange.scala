@@ -1,6 +1,7 @@
 package graft.ts
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,11 +24,18 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: the aggregation is a plain hash groupBy on (keys, bucket) —
   * partial aggregation + AQE handle skew. An unkeyed grid of at most
-  * `TimeSeriesOps.SmallGrid` buckets is generated as ONE partition and the
-  * bucket aggregate (bounded by the grid) broadcasts into it, so the fill
-  * windows and the final ORDER BY run in that partition with no exchange:
-  * the aggregate's own shuffle is the plan's only one. Larger unkeyed grids
-  * take the chunked fill; keyed fills partition the window by `keys`.
+  * `TimeSeriesOps.SmallGrid` buckets is generated as ONE partition, so the
+  * fill windows and the final ORDER BY run in that partition with no
+  * exchange. How the bucket aggregate (bounded by the grid) reaches it
+  * depends on the source's reported partitioning:
+  *  - a multi-partition source: the aggregate broadcasts into the grid, and
+  *    the aggregate's own shuffle is the plan's only exchange;
+  *  - a `SinglePartition` source (a one-partition catalog container): the
+  *    aggregate plans no exchange, and it meets the grid in a no-shuffle
+  *    union grouped by bucket, so the whole fill is one stage, one job.
+  *    A broadcast here would cost a job of its own.
+  * Larger unkeyed grids take the chunked fill; keyed fills partition the
+  * window by `keys`.
   */
 object GroupByRange {
 
@@ -60,11 +68,11 @@ object GroupByRange {
     val nBuckets = (endMs - startMs) / everyMs + 1
     // unkeyed fill is size-adaptive: the bucket count is static, so a small
     // grid (the whole fill frame is bounded by the grid, not the data) is
-    // one partition that the broadcast aggregate joins into — Range(1 slice)
-    // reports SinglePartition, which satisfies the window's clustering and
-    // the ORDER BY's ordering, so neither plans an exchange (7 stages -> 3
-    // for FILL (LINEAR)). Only genuinely large grids pay the chunked plan's
-    // extra stitch stages.
+    // one partition the aggregate is attached to (see the scale notes for
+    // how) — Range(1 slice) reports SinglePartition, which satisfies the
+    // window's clustering and the ORDER BY's ordering, so neither plans an
+    // exchange (7 stages -> 3 for FILL (LINEAR)). Only genuinely large grids
+    // pay the chunked plan's extra stitch stages.
     val small = keys.isEmpty && nBuckets <= TimeSeriesOps.SmallGrid
     val grid =
       if (keys.isEmpty) {
@@ -77,7 +85,10 @@ object GroupByRange {
         df.select(keyCols: _*).distinct().select((keyCols :+ gridTimes): _*)
       }
 
-    val joined = grid.join(if (small) broadcast(agged) else agged, keys :+ "ts_ms", "left")
+    val attached =
+      if (small && reportsSinglePartition(df)) attachByUnion(agged, grid, aggNames)
+      else grid.join(if (small) broadcast(agged) else agged, keys :+ "ts_ms", "left")
+    val joined = attached
       .withColumn("__empty", aggNames.map(col(_).isNull).reduce(_ && _))
 
     val part: Seq[Column] =
@@ -127,6 +138,25 @@ object GroupByRange {
         filled.drop("__empty", "__pt", "__nt", "__cpart")
           .orderBy((keyCols :+ col("ts_ms")): _*)
     }
+  }
+
+  /** True when `df`'s physical plan reports one partition (plans the
+    * frame; runs no job). */
+  private def reportsSinglePartition(df: DataFrame): Boolean =
+    df.queryExecution.sparkPlan.outputPartitioning == SinglePartition
+
+  /** The small grid's attach over a one-partition aggregate: the aggregate
+    * (one row per non-empty bucket, every bucket on the grid) and the grid
+    * rows (null aggregates) are unioned without a shuffle, and a group by
+    * bucket keeps each column's one non-null value. Same rows as the left
+    * join: a bucket the aggregate lacks keeps null aggregates. */
+  private def attachByUnion(agged: DataFrame, grid: DataFrame,
+                            aggNames: Seq[String]): DataFrame = {
+    val nulls = aggNames.map(c => lit(null).cast(agged.schema(c).dataType).as(c))
+    val firsts = aggNames.map(c => first(col(c), ignoreNulls = true).as(c))
+    agged.unionByName(grid.select(col("ts_ms") +: nulls: _*))
+      .coalesce(1)
+      .groupBy("ts_ms").agg(firsts.head, firsts.tail: _*)
   }
 
   /** Buckets per time chunk in the unkeyed fill path (matches

@@ -112,15 +112,13 @@ object TimeSeriesOps {
     * point. Keyed series scale by window partitioning; the unkeyed
     * (whole-container) case is chunked into coarse time slices with
     * boundary-anchor stitching — see [[sampleChunked]] — so a single
-    * giant series never serializes onto one core.
+    * giant series never serializes onto one core. Unkeyed rows come back in
+    * ascending `ts_ms`, the row-key order of a GridDB TimeSeries result.
     */
   def timeSampling(df: DataFrame, tsCol: String, valCol: String,
                    start: Column, end: Column, intervalUs: Long,
-                   keys: Seq[String] = Nil): DataFrame = {
-    val pay = struct(usec(col(tsCol)).as("t_us"),
-      col(valCol).cast("double").as("v"))
-    sampleGeneric(df, tsCol, pay, interpEmit(valCol), start, end, intervalUs, keys)
-  }
+                   keys: Seq[String] = Nil): DataFrame =
+    sample(df, tsCol, Some(valCol), start, end, intervalUs, keys, None)
 
   /** TIME_SAMPLING(*): resample ALL columns onto the grid with sample-and-hold
     * semantics — each grid instant carries the exact row if one exists there,
@@ -131,11 +129,8 @@ object TimeSeriesOps {
     * (keys..., ts_ms, <every non-key column held>). */
   def timeSamplingHold(df: DataFrame, tsCol: String,
                        start: Column, end: Column, intervalUs: Long,
-                       keys: Seq[String] = Nil): DataFrame = {
-    val held = df.columns.filterNot(c => c == tsCol || keys.contains(c)).toSeq
-    val pay = struct((usec(col(tsCol)).as("t_us") +: held.map(col)): _*)
-    sampleGeneric(df, tsCol, pay, holdEmit(held), start, end, intervalUs, keys)
-  }
+                       keys: Seq[String] = Nil): DataFrame =
+    sample(df, tsCol, None, start, end, intervalUs, keys, None)
 
   /** Sampling query with InterpolationMode.EMPTY (TimeSeries.java:497-505 +
     * InterpolationMode.java:70): NO interpolation — each grid instant
@@ -214,6 +209,9 @@ object TimeSeriesOps {
       .select((kcols :+ col("__g_us")): _*)
   }
 
+  private def interpPay(tsCol: String, valCol: String): Column =
+    struct(usec(col(tsCol)).as("t_us"), col(valCol).cast("double").as("v"))
+
   private def interpEmit(valCol: String): SampleEmit = (g, p, n) => {
     val (pT, pV) = (p.getField("t_us"), p.getField("v"))
     val (nT, nV) = (n.getField("t_us"), n.getField("v"))
@@ -225,10 +223,21 @@ object TimeSeriesOps {
   private def holdEmit(held: Seq[String]): SampleEmit = (g, p, _) =>
     (g / lit(1000)).cast("long").as("ts_ms") +: held.map(c => p.getField(c).as(c))
 
-  private def sampleGeneric(df: DataFrame, tsCol: String, pay: Column,
-                            emit: SampleEmit, start: Column, end: Column,
-                            intervalUs: Long, keys: Seq[String]): DataFrame = {
+  /** The core of [[timeSampling]] (`valCol` interpolated) and
+    * [[timeSamplingHold]] (`valCol` None: every non-key column held).
+    * `static`: the bounds as epoch micros when the caller already holds them
+    * (the TQL compiler's TIMESTAMP() literals); None folds them from
+    * `start`/`end` when the series is unkeyed. */
+  private[graft] def sample(df: DataFrame, tsCol: String, valCol: Option[String],
+                            start: Column, end: Column, intervalUs: Long,
+                            keys: Seq[String], static: Option[(Long, Long)]): DataFrame = {
     require(intervalUs > 0, "TIME_SAMPLING interval must be positive")
+    val (pay, emit) = valCol match {
+      case Some(v) => (interpPay(tsCol, v), interpEmit(v))
+      case None =>
+        val held = df.columns.filterNot(c => c == tsCol || keys.contains(c)).toSeq
+        (struct((usec(col(tsCol)).as("t_us") +: held.map(col)): _*), holdEmit(held))
+    }
     if (keys.isEmpty) {
       // the grid size is static whenever start/end are literals (the TQL and
       // SQL surfaces only produce literals): small grids take the reduced
@@ -236,14 +245,15 @@ object TimeSeriesOps {
       // not the data, so it is scale-safe at any data volume — big grids the
       // chunked one; the chunked plan's 5-6 extra stages are pure overhead
       // against a few hundred points
-      val sized = for (s0 <- staticUs(df.sparkSession, start);
-                       e0 <- staticUs(df.sparkSession, end))
-        yield (s0, (e0 - s0) / intervalUs)
-      return sized match {
+      val bounds = static.orElse(for (s0 <- staticUs(df.sparkSession, start);
+                                      e0 <- staticUs(df.sparkSession, end)) yield (s0, e0))
+      val sampled = bounds.map { case (s0, e0) => (s0, (e0 - s0) / intervalUs) } match {
         case Some((s0, n)) if n >= 0 && n <= SmallGrid =>
           sampleSmall(df, tsCol, pay, emit, s0, n, intervalUs)
         case _ => sampleChunked(df, tsCol, pay, emit, start, end, intervalUs)
       }
+      // row-key order; on the one-partition small-grid frame a local sort
+      return sampled.orderBy(col("ts_ms"))
     }
     val keyCols = keys.map(col)
     val data = df.select(
@@ -279,6 +289,7 @@ object TimeSeriesOps {
   /** Statically evaluate a timestamp Column to epoch micros when it is a
     * literal expression (all TQL/SQL surfaces produce literals). Resolution +
     * constant folding run driver-side on a one-row plan — no job is executed.
+    * Each call still costs one analyze + optimize round trip.
     * Non-foldable columns yield None. */
   private def staticUs(spark: org.apache.spark.sql.SparkSession,
                        c: Column): Option[Long] =
@@ -302,7 +313,10 @@ object TimeSeriesOps {
     *               cell ≤ k-1  (== latest row with t <= g_k);
     *   next(g_k) = first row of the earliest non-empty cell ≥ k
     *               (== earliest row with t >= g_k, cell k starting at g_k).
-    * Identical output to the single-window formulation. */
+    * Identical output to the single-window formulation. The cell aggregate
+    * is the plan's only exchange; over a source that reports
+    * `SinglePartition` (a one-partition catalog container) it plans none
+    * either, and the whole read is one job with no exchange. */
   private def sampleSmall(df: DataFrame, tsCol: String, pay: Column,
                           emit: SampleEmit, s0Us: Long, n: Long,
                           intervalUs: Long): DataFrame = {
@@ -364,9 +378,8 @@ object TimeSeriesOps {
   private[graft] def timeSamplingChunked(df: DataFrame, tsCol: String, valCol: String,
                                          start: Column, end: Column,
                                          intervalUs: Long): DataFrame =
-    sampleChunked(df, tsCol,
-      struct(usec(col(tsCol)).as("t_us"), col(valCol).cast("double").as("v")),
-      interpEmit(valCol), start, end, intervalUs)
+    sampleChunked(df, tsCol, interpPay(tsCol, valCol), interpEmit(valCol),
+      start, end, intervalUs)
 
   private def sampleChunked(df: DataFrame, tsCol: String, pay: Column,
                             emit: SampleEmit, start: Column, end: Column,

@@ -103,4 +103,25 @@ class TqlCompilerSpec extends SparkTestBase {
     assert(plan.contains("GreaterThan(value,100") || plan.contains("value"), plan)
     assert(rows.exists(_.getString(2).contains("SCAN")), plan)
   }
+
+  test("TIME_SAMPLING rows come back in ascending ts_ms (row-key order)") {
+    // one row every 7 s over ten minutes, value = seconds since base, so
+    // every sampled value is its grid offset in seconds (the series is
+    // linear: exact hits and interpolations agree)
+    val baseMs = 1717200000000L // 2024-06-01T00:00:00Z
+    val df = (0L until 600L by 7L)
+      .map(k => (new Timestamp(baseMs + k * 1000L), k.toDouble)).toDF("ts", "value")
+    val c = Container("ts", df, TimeSeries, Seq("ts"), Some("ts"))
+    val got = TqlCompiler.run(c, "select TIME_SAMPLING(value, " +
+        "TIMESTAMP('2024-06-01T00:00:00Z'), TIMESTAMP('2024-06-01T00:09:00Z'), 1, MINUTE)")
+      .select("ts_ms", "value").as[(Long, Double)].collect().toSeq
+    assert(got.map(_._1) == (0L to 9L).map(m => baseMs + m * 60000L))
+    got.foreach { case (t, v) =>
+      assert(math.abs(v - (t - baseMs) / 1000.0) < 1e-9, s"value $v at $t") }
+    // the star (sample-and-hold) form: the held row's image, same order
+    val held = TqlCompiler.run(c, "select TIME_SAMPLING(*, " +
+        "TIMESTAMP('2024-06-01T00:00:00Z'), TIMESTAMP('2024-06-01T00:09:00Z'), 1, MINUTE)")
+      .select("ts_ms").as[Long].collect().toSeq
+    assert(held == (0L to 9L).map(m => baseMs + m * 60000L))
+  }
 }
