@@ -29,7 +29,8 @@ object GraftSession {
       // per-partition estimate allows it (Spark's canBuildLocalHashMap
       // guard still applies): past the broadcast cliff SHJ skips the two
       // full-side sorts — measured at sf100z, q5 30.8 s vs 53.6 s and q3
-      // 18.3 s vs 25.4 s mins, alternating A/B (tools/ProbeShj, r12).
+      // 18.3 s vs 25.4 s mins, alternating A/B (r12;
+      // tools/ProbeShj at commit 7cc6c14).
       // Composes with the data-derived shuffle width, which keeps
       // per-partition build sides bounded; small-SF plans are unaffected
       // (dims broadcast long before either strategy is consulted).

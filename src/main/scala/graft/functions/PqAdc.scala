@@ -13,7 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * 0d, +)`) dispatches three interpreted lambda layers per pair — the same
   * tax the SQ8 path paid before [[SqCosine]] (and BPE before
   * BpeEncodePieces). Parity contract with that form, pinned by the
-  * q_sim_pq_ann / q_sim_ivfpq_ann goldens:
+  * q_sim_pq_ann / q_sim_ivfpq_ann goldens and by QuantizeSpec, which keeps
+  * the fold as the reference and compares both codegen and interpreted
+  * evaluation:
   *  - accumulation is left-to-right j = 0..m-1 in double precision
   *    (zip_with preserves order; aggregate folds left to right);
   *  - a null code element yields NULL (`acc + null` nulls the HOF fold

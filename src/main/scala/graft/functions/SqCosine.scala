@@ -12,9 +12,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * The two-step formulation (`graft_cosine(q, sqDecode(codes))`) pays an
   * interpreted HOF `transform` per corpus row AND materializes the decoded
   * array; at 2M vectors that made the quantized serving scan ~1.5× SLOWER
-  * than raw floats despite reading 3.8× fewer bytes (ProbeSq). This
-  * expression reads the int codes directly and reconstructs each element
-  * inline: `mn[d] + (code * diff[d]) / 255.0` — the EXACT operation order
+  * than raw floats despite reading 3.8× fewer bytes
+  * (tools/ProbeSq at commit 7cc6c14). This expression reads the int codes
+  * directly and reconstructs each element inline:
+  * `mn[d] + (code * diff[d]) / 255.0` — the EXACT operation order
   * of [[graft.pipeline.Quantize.sqDecode]] (`diff` is the precomputed
   * `mx-mn`, itself a deterministic IEEE subtraction), followed by
   * [[CosineSimilarity]]'s left-to-right dot/norm accumulation, so the

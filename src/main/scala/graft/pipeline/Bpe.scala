@@ -43,7 +43,8 @@ object Bpe {
     * LOWER-rank merge's component and re-enable it, so only the full
     * greedy loop matches the from-scratch kernel (whose lowest-rank-first
     * order replays the previous table's fixpoint before touching the new
-    * merge — the equivalence the differential spec and ProbeBpeDiff pin).
+    * merge — the equivalence the differential spec and
+    * tools/ProbeBpeDiff at commit 7cc6c14 pin).
     * Near-fixpoint input means the loop usually fuses once and exits; an
     * interpreted fold at this spot cost ~3x the FULL kernel replay per
     * iteration at the 5M-doc probe (SCALING.md round 9). */

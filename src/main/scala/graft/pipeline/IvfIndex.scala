@@ -37,14 +37,15 @@ object IvfIndex {
     * `codec = "sq8"` stores the inverted lists as SQ8 codes instead of raw
     * doubles ([[Quantize]]): the vectors tree — the part of the index that
     * scales with the corpus and that every probe reads — shrinks ~4×
-    * (ProbeSq), while centroids, probing, and pruning are unchanged (the
-    * coarse quantizer stays full-precision). Serving scores through the
-    * decode-fused [[Quantize.sqCosine]] kernel; appends encode against the
-    * stats SAVED at build (out-of-range values saturate — drift degrades
-    * reconstruction at the edges, not correctness), and retrain re-trains
-    * centroids AND stats from the reconstructions (the originals are gone
-    * — that is what compression means; re-gridding reconstructions adds
-    * at most one quantization step of error).
+    * (tools/ProbeSq at commit 7cc6c14), while centroids, probing, and
+    * pruning are unchanged (the coarse quantizer stays full-precision).
+    * Serving scores through the decode-fused [[Quantize.sqCosine]] kernel;
+    * appends encode against the stats SAVED at build (out-of-range values
+    * saturate — drift degrades reconstruction at the edges, not
+    * correctness), and retrain re-trains centroids AND stats from the
+    * reconstructions (the originals are gone — that is what compression
+    * means; re-gridding reconstructions adds at most one quantization step
+    * of error).
     *
     * `attrCols` are scalar metadata columns carried into the vectors tree
     * (source/date/lang/label — the fields a filtered serve predicates on,
@@ -116,9 +117,10 @@ object IvfIndex {
           col("cluster") +: attrCols.map(col): _*)
       } else assigned
     requireNoNullPartitionAttrs(payload, attrPartitionBy)
-    // zstd for the index data tree (r19, guide §6 — ProbeIndexCodec at
-    // sf10z: 80.2 -> 58.7 MB, 27% smaller, serve medians unchanged or
-    // better; at 100 TB the vectors tree is the index's storage bill)
+    // zstd for the index data tree (r19, guide §6 —
+    // tools/ProbeIndexCodec at commit 7cc6c14, sf10z: 80.2 -> 58.7 MB,
+    // 27% smaller, serve medians unchanged or better; at 100 TB the
+    // vectors tree is the index's storage bill)
     payload.repartition(col("cluster"))
       .write.mode("overwrite").option("compression", "zstd")
       .partitionBy("cluster" +: attrPartitionBy: _*)

@@ -109,9 +109,10 @@ object Quantize {
     * column (functions/SqCosine): bit-identical to
     * `Similarity.cosine(q, sqDecode(codes, stats))` — same reconstruction
     * op order, same accumulation — without the interpreted decode
-    * `transform` or the materialized decoded array (ProbeSq: the two-step
-    * form made the quantized scan ~1.5× slower than raw floats at 2M
-    * vectors; fused it wins). */
+    * `transform` or the materialized decoded array
+    * (tools/ProbeSq at commit 7cc6c14: the two-step form made the
+    * quantized scan ~1.5× slower than raw floats at 2M vectors; fused it
+    * wins). */
   def sqCosine(query: Column, codes: Column, stats: SqStats): Column =
     call_function("graft_sq_cosine", query, codes, lit(stats.mn), lit(stats.mx))
 

@@ -58,9 +58,9 @@ object Similarity {
     * `candidateHint`), the codegen'd window sort beats the capped
     * aggregate's per-row ObjectHashAggregate overhead; above it (or when
     * the count is unknown) the k-capped form's bounded buffers win and
-    * stay safe under skew. Crossover measured r11 (ProbeTopKCrossover,
-    * sf0.1): window 1.6x faster at 10k candidates, parity ~150k, capped
-    * 1.7x faster by 1M. */
+    * stay safe under skew. Crossover measured r11 (sf0.1;
+    * tools/ProbeTopKCrossover at commit 7cc6c14): window 1.6x faster at
+    * 10k candidates, parity ~150k, capped 1.7x faster by 1M. */
   private[graft] val CappedRankThreshold = 200000L
 
   private[graft] def topKPerQuery(scored: DataFrame, k: Int,
@@ -470,14 +470,10 @@ object Similarity {
     * of the survivors; with rerank off it is the cosine against the
     * reconstructed vector (null on zero-norm, matching graft_cosine's
     * contract, so degenerate rows sort last not first). */
-  /** `useFusedAdc = false` keeps the retired interpreted HOF score form
-    * alive for differential probing only (ProbePqAdc — the BpeDiff
-    * discipline for new fast paths); production callers never pass it. */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, m: Int = 8, kCodes: Int = 16,
              steps: Int = 4, rerank: Int = -1,
-             roundTo: Int = 4, trainFraction: Double = 1.0,
-             useFusedAdc: Boolean = true): DataFrame = {
+             roundTo: Int = 4, trainFraction: Double = 1.0): DataFrame = {
     ensureFns(corpus)
     val c0 = spread(corpus).select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("cv"))
     val dim = vecDim(c0, "cv")
@@ -495,8 +491,9 @@ object Similarity {
     // every norm lookup (9 evaluations of all m argmins per row when the
     // oversized generated method falls out of codegen and interpreted
     // eval has no subexpression reuse — measured 2 ms/row, 417 s for a
-    // 200k-vector encode, r11 ProbePqAdc). CollapseProject keeps the
-    // stage split because the reference is non-cheap and multiply-used.
+    // 200k-vector encode, r11; tools/ProbePqAdc at commit 7cc6c14).
+    // CollapseProject keeps the stage split because the reference is
+    // non-cheap and multiply-used.
     val normTable = books.map(_.map(cent => cent.map(x => x * x).sum))
     val enc0 = c0.select(col("c_id"), codes.as("codes"))
     val rnorm2 = (0 until m).map { j =>
@@ -519,14 +516,8 @@ object Similarity {
     // per-pair: m lookups, no vector arithmetic
     // fused m-lookup ADC sum (functions/PqAdc) — bit-identical to the
     // interpreted aggregate(zip_with(..element_at..)) fold it replaced
-    // (left-to-right, null on null code / out-of-range index)
-    val ip =
-      if (useFusedAdc)
-        call_function("graft_pq_adc", col("codes"), col("lut"), lit(kCodes))
-      else aggregate(
-        zip_with(col("codes"), sequence(lit(0), lit(m - 1)),
-          (code, j) => element_at(col("lut"), j * kCodes + code + 1)),
-        lit(0.0), (acc, x) => acc + x)
+    // (left-to-right, null on null code / out-of-range index; QuantizeSpec)
+    val ip = call_function("graft_pq_adc", col("codes"), col("lut"), lit(kCodes))
     // zero-norm guard: a zero query vector or a zero-norm reconstruction
     // must score null (sorts LAST under desc), not NaN (which Spark sorts
     // FIRST and would pin the degenerate row at rk=1 for every query) —

@@ -1687,7 +1687,8 @@ object PipelineQueries {
     //      that scales with the corpus), scored via the decode-fused
     //      graft_sq_cosine kernel; probing/pruning identical. FULL DuckDB
     //      oracle (r12 verdict #3): IVF replay + the q_sim_sq_ann codec
-    //      replay composed; recall + size bounds in IvfIndexSpec/ProbeSq ----
+    //      replay composed; recall + size bounds in IvfIndexSpec and
+    //      tools/ProbeSq at commit 7cc6c14 ----
     Q.df("q_sim_ivfsq_indexed", duck = IvfSqOracle) { (s, dir) =>
       val e = embs(s, dir)
       IvfIndex.topK(s, ivfIndexPath(s, dir, codec = "sq8"),

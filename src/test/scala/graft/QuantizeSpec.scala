@@ -162,4 +162,54 @@ class QuantizeSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("kCodes"), e.getMessage)
   }
+
+  test("graft_pq_adc equals the aggregate(zip_with(..)) fold it replaced, codegen and interpreted") {
+    // every subspace holds the same three values, so a row's codes choose
+    // the order its terms are summed in: 1 + 1e16 - 1e16 is 0 left to
+    // right but 1 right to left
+    val (m, kCodes) = (3, 3)
+    val lut = Seq.fill(m)(Seq(1.0, 1e16, -1e16)).flatten
+    val inRange = Seq(0, 1, 2).permutations.map(_.map(Option(_))).toSeq
+    val nullCode = Seq(Some(0), None, Some(1))
+    // flat indexes 4 and 3 are in range, so the fold reads a neighbouring
+    // subspace's entry where the kernel nulls (PqAdc's documented divergence)
+    val outOfRange = Seq(Seq(Some(kCodes), Some(0), Some(0)), Seq(Some(0), Some(-1), Some(1)))
+    val rows = inRange ++ Seq(nullCode) ++ outOfRange
+    val df = rows.zipWithIndex.map { case (c, i) => (i.toLong, c, lut) }
+      .toDF("id", "codes", "lut")
+      .repartition(2) // a LocalRelation projection would be folded by the optimizer, uncompiled
+    graft.functions.GridDbScalarFunctions.register(spark)
+    // the interpreted fold graft_pq_adc replaced, kept here as its reference
+    val fold = expr(s"aggregate(zip_with(codes, sequence(0, ${m - 1}), " +
+      s"(c, j) -> element_at(lut, j * $kCodes + c + 1)), 0d, (a, x) -> a + x)")
+
+    def check(confs: (String, String)*): Unit = {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val got = df.select(col("id"),
+            call_function("graft_pq_adc", col("codes"), col("lut"), lit(kCodes)).as("adc"),
+            fold.as("fold"))
+          .as[(Long, Option[Double], Option[Double])].collect()
+          .map { case (i, adc, f) => i.toInt -> (adc, f) }.toMap
+        inRange.indices.foreach { i =>
+          val (adc, f) = got(i)
+          assert(adc == f, s"$confs row ${inRange(i)}: kernel $adc vs fold $f")
+        }
+        // the rows sum one multiset of terms: unequal sums show the order mattered
+        assert(inRange.indices.map(got(_)._1).distinct.size > 1, s"$confs: $got")
+        assert(got(inRange.size) == (None, None), s"$confs null code: ${got(inRange.size)}")
+        outOfRange.indices.foreach { i =>
+          val (adc, f) = got(inRange.size + 1 + i)
+          assert(adc.isEmpty && f.isDefined, s"$confs row ${outOfRange(i)}: kernel $adc, fold $f")
+        }
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    check("spark.sql.codegen.wholeStage" -> "true")
+    check("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+  }
 }
