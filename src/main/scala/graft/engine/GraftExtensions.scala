@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.GridDbScalarFunctions
+import graft.ts.GridSweepStrategy
 
 /** SparkSessionExtensions entry point: makes every GridDB-dialect function
   * available in any session built with
@@ -45,5 +46,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // CollapseCodegenStages, so statements that differ only in constants
     // reuse compiled classes
     e.injectColumnar(_ => BindConstantsColumnarRule)
+    // the one-pass grid operator of small unkeyed TIME_SAMPLING and
+    // GROUP BY RANGE fills (graft.ts.GridSweep)
+    e.injectPlannerStrategy(_ => GridSweepStrategy)
   }
 }

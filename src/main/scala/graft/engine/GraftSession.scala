@@ -109,6 +109,8 @@ object GraftSession {
     // naive parquet timestamps as TIMESTAMP, not NTZ (see configure)
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     GraftFunctions.registerAll(spark)
+    // plans graft.ts.GridSweep where GraftExtensions did not inject it
+    graft.ts.GridSweepStrategy.install(spark)
     spark
   }
 }

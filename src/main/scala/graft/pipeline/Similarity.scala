@@ -410,36 +410,22 @@ object Similarity {
     * training contract; a production trainer runs on a corpus SAMPLE, which
     * is what `c0` should be at 100 TB). */
   private[graft] def pqCodebooks(c0: DataFrame, dim: Int, m: Int,
-                                 kCodes: Int, steps: Int = 4): Array[Array[Array[Double]]] = {
+                                 kCodes: Int): Array[Array[Array[Double]]] = {
     require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
     val d = dim / m
     (0 until m).map { j =>
       val sub = c0.select(col("c_id"), slice(col("cv"), j * d + 1, d).as("cv"))
-      val book = ivfCentroids(sub, d, kCodes, steps)
+      val book = ivfCentroids(sub, d, kCodes, steps = 4)
       // fail fast, not silently coarse: the flat ADC lut is indexed with a
       // FIXED kCodes stride, so a short codebook (training slice smaller
       // than kCodes rows) would make mid subspaces read a neighbor's lut
       // block and late subspaces run off the end (r11 review)
       require(book.length == kCodes,
         s"PQ subspace $j trained ${book.length} centroids < kCodes=$kCodes: " +
-          "the training slice has too few rows — lower kCodes or raise trainFraction")
+          "the corpus has too few rows — lower kCodes")
       book
     }.toArray
   }
-
-  /** Deterministic training subset for [[pqTopK]]: the rows whose 32-bit
-    * md5-prefix bucket (Curation.hashBucket discipline — reproducible across
-    * runs/engines/cluster sizes) falls under `fraction`. At 100 TB codebook
-    * training must NOT scan the full corpus m*steps times; a 1e-3 fraction
-    * trains statistically identical codebooks with 1000x less training IO
-    * while the full corpus still flows through encode exactly once. */
-  private def trainSlice(c0: DataFrame, fraction: Double): DataFrame =
-    if (fraction >= 1.0) c0
-    else {
-      val denom = 1 << 20
-      val num = math.max(1, math.round(fraction * denom).toInt)
-      c0.filter(Curation.hashBucket(col("c_id"), denom) < num)
-    }
 
   /** PQ-encoded approximate cosine top-k (asymmetric-distance form).
     *
@@ -453,32 +439,24 @@ object Similarity {
     * where |reconstruction| comes from a literal norm table — no original
     * corpus vector is touched after encoding.
     *
-    * `rerank < 0` (the default) means AUTO: the ADC pass only GENERATES a
-    * 12*k candidate pool per query (a Faiss-IndexRefine-style k_factor —
+    * The ADC pass only GENERATES a 12*k candidate pool per query (a Faiss-IndexRefine-style k_factor —
     * m-byte codes rank only coarsely, so the pool must be an order of
     * magnitude over k; measured recall at the default m=8/kCodes=16 on the
     * 64-dim test embeddings: pool 4k → 0.53, pool 12k → 0.73) and the
     * exact cosine against the true corpus vector decides the final top-k —
     * recall is then the chance the true neighbor made the pool, not the
-    * chance coarse ADC ranked it exactly first. `rerank = 0` disables the
-    * refine (pure ADC, for profiling the quantizer); `rerank > 0` sets the
-    * pool size explicitly. `trainFraction < 1` trains the codebooks on a
-    * deterministic hash-sampled subset (see [[trainSlice]]) — at scale,
-    * always set this; the full corpus is only ever scanned once, by encode.
+    * chance coarse ADC ranked it exactly first. Codebooks train on the
+    * whole corpus with four Lloyd steps per subspace.
     *
-    * Output: (q_id, c_id, cos, rk); with rerank on, cos is the EXACT cosine
-    * of the survivors; with rerank off it is the cosine against the
-    * reconstructed vector (null on zero-norm, matching graft_cosine's
-    * contract, so degenerate rows sort last not first). */
+    * Output: (q_id, c_id, cos, rk); cos is the EXACT cosine of the
+    * survivors (rounded to 4 digits). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
-             vecCol: String, k: Int, m: Int = 8, kCodes: Int = 16,
-             steps: Int = 4, rerank: Int = -1,
-             roundTo: Int = 4, trainFraction: Double = 1.0): DataFrame = {
+             vecCol: String, k: Int, m: Int = 8, kCodes: Int = 16): DataFrame = {
     ensureFns(corpus)
     val c0 = spread(corpus).select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("cv"))
     val dim = vecDim(c0, "cv")
     val d = dim / m
-    val books = pqCodebooks(trainSlice(c0, trainFraction), dim, m, kCodes, steps)
+    val books = pqCodebooks(c0, dim, m, kCodes)
 
     // encode: one argmin kernel per subspace over its codebook
     val codes = array((0 until m).map { j =>
@@ -521,33 +499,32 @@ object Similarity {
     // zero-norm guard: a zero query vector or a zero-norm reconstruction
     // must score null (sorts LAST under desc), not NaN (which Spark sorts
     // FIRST and would pin the degenerate row at rk=1 for every query) —
-    // same contract as graft_cosine on the exact/rerank path
+    // same contract as graft_cosine on the exact path
     val denom2 = col("qnorm") * col("rnorm")
     val scored = enc.join(broadcast(q), col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
-        when(denom2 === 0.0, lit(null))
-          .otherwise(round(ip / denom2, roundTo)).as("cos"))
-    val poolSize = if (rerank < 0) 12 * k else rerank
-    if (poolSize == 0) topKPerQuery(scored, k)
-    else {
-      // refine stage (the Faiss IndexRefine shape): the ADC pass only
-      // GENERATES max(poolSize, k) candidates per query; survivors re-join
-      // their true corpus vector (equi-join on the id — candidates are
-      // k-bounded per query, the join is tiny relative to the corpus scan)
-      // and the exact cosine decides the final top-k, so recall is the
-      // chance the true neighbor made the candidate pool — the quantity
-      // that actually improves with m/kCodes — not the chance ADC ranked
-      // it exactly first
-      val pool = topKPerQuery(scored, math.max(poolSize, k))
-        .select(col("q_id"), col("c_id"))
-      val qv = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("qv"))
-      val exact = pool
-        .join(c0, "c_id")
-        .join(broadcast(qv), "q_id")
-        .select(col("q_id"), col("c_id"),
-          round(cosine(col("qv"), col("cv")), roundTo).as("cos"))
-      topKPerQuery(exact, k)
-    }
+        when(denom2 === 0.0, lit(null)).otherwise(round(ip / denom2, 4)).as("cos"))
+    // refine stage (the Faiss IndexRefine shape): the ADC pass only
+    // GENERATES 12*k candidates per query; survivors re-join their true
+    // corpus vector (equi-join on the id — candidates are k-bounded per
+    // query, the join is tiny relative to the corpus scan) and the exact
+    // cosine decides the final top-k, so recall is the chance the true
+    // neighbor made the candidate pool — the quantity that actually
+    // improves with m/kCodes — not the chance ADC ranked it exactly first
+    exactRerank(scored, queries, c0, idCol, vecCol, k)
+  }
+
+  /** The PQ paths' refine: the exact cosine of each query's 12*k best ADC
+    * candidates decides its top-k. */
+  private def exactRerank(scored: DataFrame, queries: DataFrame, c0: DataFrame,
+                          idCol: String, vecCol: String, k: Int): DataFrame = {
+    val pool = topKPerQuery(scored, 12 * k).select(col("q_id"), col("c_id"))
+    val qv = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("qv"))
+    val exact = pool
+      .join(c0, "c_id")
+      .join(broadcast(qv), "q_id")
+      .select(col("q_id"), col("c_id"), round(cosine(col("qv"), col("cv")), 4).as("cos"))
+    topKPerQuery(exact, k)
   }
 
   /** IVF-PQ composite approximate top-k (the Faiss IVFPQ shape, sans
@@ -558,21 +535,18 @@ object Similarity {
     * candidate costs m table lookups. Codebooks are SHARED across lists
     * (per-list residual codebooks are the production refinement; the list
     * restriction and code scoring — the two scale mechanisms — are what
-    * this operator exercises). A final exact-cosine rerank of the
-    * `rerank`-sized pool (default 12*k, as [[pqTopK]]) decides the top-k.
+    * this operator exercises). A final exact-cosine rerank of a 12*k
+    * pool, as in [[pqTopK]], decides the top-k.
     * Output: (q_id, c_id, cos, rk). */
   def ivfPqTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                 vecCol: String, k: Int, nLists: Int = -1, nProbe: Int = 4,
-                m: Int = 8, kCodes: Int = 16, steps: Int = 4,
-                rerank: Int = -1, roundTo: Int = 4,
-                trainFraction: Double = 1.0, corpusSize: Long = -1L): DataFrame = {
+                m: Int = 8, kCodes: Int = 16, corpusSize: Long = -1L): DataFrame = {
     ensureFns(corpus)
     val c0 = spread(corpus).select(col(idCol).as("c_id"), asDouble(col(vecCol)).as("cv"))
     val dim = vecDim(c0, "cv")
     val d = dim / m
-    val train = trainSlice(c0, trainFraction)
-    val cents = ivfCentroids(train, dim, resolveLists(corpus, nLists, corpusSize))
-    val books = pqCodebooks(train, dim, m, kCodes, steps)
+    val cents = ivfCentroids(c0, dim, resolveLists(corpus, nLists, corpusSize))
+    val books = pqCodebooks(c0, dim, m, kCodes)
 
     // corpus side: list assignment + PQ codes + reconstruction norm, all
     // computed in the single encode pass
@@ -615,21 +589,8 @@ object Similarity {
     val scored = enc.join(broadcast(q), Seq("cluster"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id"),
-        when(denom2 === 0.0, lit(null))
-          .otherwise(round(ip / denom2, roundTo)).as("cos"))
-    val poolSize = if (rerank < 0) 12 * k else rerank
-    if (poolSize == 0) topKPerQuery(scored, k)
-    else {
-      val pool = topKPerQuery(scored, math.max(poolSize, k))
-        .select(col("q_id"), col("c_id"))
-      val qv = queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("qv"))
-      val exact = pool
-        .join(c0, "c_id")
-        .join(broadcast(qv), "q_id")
-        .select(col("q_id"), col("c_id"),
-          round(cosine(col("qv"), col("cv")), roundTo).as("cos"))
-      topKPerQuery(exact, k)
-    }
+        when(denom2 === 0.0, lit(null)).otherwise(round(ip / denom2, 4)).as("cos"))
+    exactRerank(scored, queries, c0, idCol, vecCol, k)
   }
 
   /** Approximate cosine top-k: candidates limited to same-LSH-bucket pairs.

@@ -464,7 +464,7 @@ object PipelineQueries {
 
   // ---- PQ / IVF-PQ replay (r13, extending the IVF promotion): codebook
   // training is m independent per-subspace k-means runs (seeds = first
-  // kCodes sub-vectors by id, FOUR Lloyd steps — pqCodebooks' default),
+  // kCodes sub-vectors by id, FOUR Lloyd steps — pqCodebooks' fixed count),
   // encode is per-subspace argmin, ADC score = sum of <q_sub, codebook>
   // inner products over sqrt(|q|^2 * sum of codebook-entry norms), pool =
   // top-12k per query by (rounded ADC cos DESC, c_id), final = EXACT

@@ -1,9 +1,9 @@
 package graft.ts
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 
 /** GridDB `GROUP BY RANGE(ts) EVERY (n, unit) FILL (mode)` — tumbling time
   * buckets over [start, end], including EMPTY bucket generation and gap fill.
@@ -23,19 +23,16 @@ import org.apache.spark.sql.functions._
   *              anchor stay NULL (the reference fills only between anchors).
   *
   * Scale notes: the aggregation is a plain hash groupBy on (keys, bucket) —
-  * partial aggregation + AQE handle skew. An unkeyed grid of at most
-  * `TimeSeriesOps.SmallGrid` buckets is generated as ONE partition, so the
-  * fill windows and the final ORDER BY run in that partition with no
-  * exchange. How the bucket aggregate (bounded by the grid) reaches it
-  * depends on the source's reported partitioning:
-  *  - a multi-partition source: the aggregate broadcasts into the grid, and
-  *    the aggregate's own shuffle is the plan's only exchange;
-  *  - a `SinglePartition` source (a one-partition catalog container): the
-  *    aggregate plans no exchange, and it meets the grid in a no-shuffle
-  *    union grouped by bucket, so the whole fill is one stage, one job.
-  *    A broadcast here would cost a job of its own.
-  * Larger unkeyed grids take the chunked fill; keyed fills partition the
-  * window by `keys`.
+  * partial aggregation + AQE handle skew. An unkeyed fill of at most
+  * `TimeSeriesOps.SmallGrid` buckets is one [[GridSweep]] pass over the
+  * bucket aggregate itself (bounded by the grid): no grid frame, no join,
+  * no window, and the output comes in `ts_ms` order, so the final ORDER BY
+  * plans no exchange or sort. The aggregate reaches the sweep through a
+  * no-shuffle `coalesce(1)`: over a multi-partition source its own shuffle
+  * is the plan's only exchange, and over a `SinglePartition` source (a
+  * one-partition catalog container) the whole fill is one stage, one job.
+  * FILL (LINEAR) over a non-numeric aggregate, and larger unkeyed grids,
+  * take the chunked fill; keyed fills partition the window by `keys`.
   */
 object GroupByRange {
 
@@ -64,42 +61,45 @@ object GroupByRange {
       return agged.orderBy((keyCols :+ col("ts_ms")): _*)
 
     val aggNames = agged.columns.filterNot(c => c == "ts_ms" || keys.contains(c)).toSeq
-    val spark = df.sparkSession
     val nBuckets = (endMs - startMs) / everyMs + 1
     // unkeyed fill is size-adaptive: the bucket count is static, so a small
-    // grid (the whole fill frame is bounded by the grid, not the data) is
-    // one partition the aggregate is attached to (see the scale notes for
-    // how) — Range(1 slice) reports SinglePartition, which satisfies the
-    // window's clustering and the ORDER BY's ordering, so neither plans an
-    // exchange (7 stages -> 3 for FILL (LINEAR)). Only genuinely large grids
-    // pay the chunked plan's extra stitch stages.
-    val small = keys.isEmpty && nBuckets <= TimeSeriesOps.SmallGrid
+    // grid is one sweep over the aggregate; only genuinely large grids pay
+    // the chunked plan's extra stitch stages. The LINEAR sweep reads each
+    // aggregate cast to double, which is what the window plan's CASE WHEN
+    // does to a numeric one; other types keep the window plan's coercion
+    // on the chunked path.
+    if (keys.isEmpty && nBuckets <= TimeSeriesOps.SmallGrid) fill match {
+      case FillNull | FillPrevious =>
+        return GridSweep(agged, GridSweep.Fill(fill == FillPrevious), startMs, everyMs,
+          nBuckets - 1, aggNames).orderBy(col("ts_ms"))
+      case FillLinear if aggNames.forall(c => agged.schema(c).dataType.isInstanceOf[NumericType]) =>
+        val asDouble = agged.select(col("ts_ms") +: aggNames.map(c => col(c).cast("double").as(c)): _*)
+        return GridSweep(asDouble, GridSweep.FillLinear, startMs, everyMs,
+          nBuckets - 1, aggNames).orderBy(col("ts_ms"))
+      case _ =>
+    }
+
+    val spark = df.sparkSession
     val grid =
       if (keys.isEmpty) {
         // one bucket per range element, no driver array
-        val ids = if (small) spark.range(0, nBuckets, 1, 1) else spark.range(nBuckets)
-        ids.select((col("id") * everyMs + startMs).as("ts_ms"))
+        spark.range(nBuckets).select((col("id") * everyMs + startMs).as("ts_ms"))
       } else {
         val gridTimes = explode(sequence(lit(startMs),
           lit(startMs + (nBuckets - 1) * everyMs), lit(everyMs))).as("ts_ms")
         df.select(keyCols: _*).distinct().select((keyCols :+ gridTimes): _*)
       }
 
-    val attached =
-      if (small && reportsSinglePartition(df)) attachByUnion(agged, grid, aggNames)
-      else grid.join(if (small) broadcast(agged) else agged, keys :+ "ts_ms", "left")
-    val joined = attached
+    val joined = grid.join(agged, keys :+ "ts_ms", "left")
       .withColumn("__empty", aggNames.map(col(_).isNull).reduce(_ && _))
 
-    val part: Seq[Column] =
-      if (keys.isEmpty) Seq(pmod(col("ts_ms"), lit(1))) else keyCols
     fill match {
       case FillNull | FillNone =>
         joined.drop("__empty").orderBy((keyCols :+ col("ts_ms")): _*)
-      case FillPrevious | FillLinear if keys.isEmpty && !small =>
+      case FillPrevious | FillLinear if keys.isEmpty =>
         fillChunked(joined, aggNames, startMs, everyMs, fill == FillLinear)
       case FillPrevious =>
-        val w = Window.partitionBy(part: _*).orderBy(col("ts_ms"))
+        val w = Window.partitionBy(keyCols: _*).orderBy(col("ts_ms"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val filled = aggNames.foldLeft(joined) { (d, c) =>
           d.withColumn(c, when(col("__empty"),
@@ -108,21 +108,12 @@ object GroupByRange {
         }
         filled.drop("__empty").orderBy((keyCols :+ col("ts_ms")): _*)
       case FillLinear =>
-        // unkeyed: the constant partition key is a named column so the asc
-        // and desc windows share one partitioning (a raw expression key
-        // re-projects as a fresh `_w0` per Window node); on the one-partition
-        // grid neither window needs an exchange, only a local sort each
-        val (joinedP, partC) =
-          if (keys.isEmpty)
-            (joined.withColumn("__cpart", pmod(col("ts_ms"), lit(1))),
-              Seq(col("__cpart")))
-          else (joined, part)
-        val wp = Window.partitionBy(partC: _*).orderBy(col("ts_ms"))
+        val wp = Window.partitionBy(keyCols: _*).orderBy(col("ts_ms"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val wn = Window.partitionBy(partC: _*).orderBy(col("ts_ms").desc)
+        val wn = Window.partitionBy(keyCols: _*).orderBy(col("ts_ms").desc)
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val anchorT = when(!col("__empty"), col("ts_ms"))
-        val base = joinedP
+        val base = joined
           .withColumn("__pt", last(anchorT, ignoreNulls = true).over(wp))
           .withColumn("__nt", last(anchorT, ignoreNulls = true).over(wn))
         val filled = aggNames.foldLeft(base) { (d, c) =>
@@ -135,28 +126,8 @@ object GroupByRange {
                   (col("__nt") - col("__pt")).cast("double")))
             .otherwise(lit(null)))
         }
-        filled.drop("__empty", "__pt", "__nt", "__cpart")
-          .orderBy((keyCols :+ col("ts_ms")): _*)
+        filled.drop("__empty", "__pt", "__nt").orderBy((keyCols :+ col("ts_ms")): _*)
     }
-  }
-
-  /** True when `df`'s physical plan reports one partition (plans the
-    * frame; runs no job). */
-  private def reportsSinglePartition(df: DataFrame): Boolean =
-    df.queryExecution.sparkPlan.outputPartitioning == SinglePartition
-
-  /** The small grid's attach over a one-partition aggregate: the aggregate
-    * (one row per non-empty bucket, every bucket on the grid) and the grid
-    * rows (null aggregates) are unioned without a shuffle, and a group by
-    * bucket keeps each column's one non-null value. Same rows as the left
-    * join: a bucket the aggregate lacks keeps null aggregates. */
-  private def attachByUnion(agged: DataFrame, grid: DataFrame,
-                            aggNames: Seq[String]): DataFrame = {
-    val nulls = aggNames.map(c => lit(null).cast(agged.schema(c).dataType).as(c))
-    val firsts = aggNames.map(c => first(col(c), ignoreNulls = true).as(c))
-    agged.unionByName(grid.select(col("ts_ms") +: nulls: _*))
-      .coalesce(1)
-      .groupBy("ts_ms").agg(firsts.head, firsts.tail: _*)
   }
 
   /** Buckets per time chunk in the unkeyed fill path (matches

@@ -109,9 +109,11 @@ object TimeSeriesOps {
     *
     * Implemented shuffle-lean: the grid is unioned with the data and a single
     * window pass (per key) computes the bracketing rows — no join per grid
-    * point. Keyed series scale by window partitioning; the unkeyed
-    * (whole-container) case is chunked into coarse time slices with
-    * boundary-anchor stitching — see [[sampleChunked]] — so a single
+    * point. Keyed series scale by window partitioning; an unkeyed
+    * (whole-container) grid of at most `SmallGrid` points is one
+    * [[GridSweep]] pass over a grid-bounded cell aggregate — see
+    * [[sampleSmall]] — and a larger one is chunked into coarse time slices
+    * with boundary-anchor stitching — see [[sampleChunked]] — so a single
     * giant series never serializes onto one core. Unkeyed rows come back in
     * ascending `ts_ms`, the row-key order of a GridDB TimeSeries result.
     */
@@ -232,11 +234,12 @@ object TimeSeriesOps {
                             start: Column, end: Column, intervalUs: Long,
                             keys: Seq[String], static: Option[(Long, Long)]): DataFrame = {
     require(intervalUs > 0, "TIME_SAMPLING interval must be positive")
-    val (pay, emit) = valCol match {
-      case Some(v) => (interpPay(tsCol, v), interpEmit(v))
+    val (pay, emit, mode, names) = valCol match {
+      case Some(v) => (interpPay(tsCol, v), interpEmit(v), GridSweep.Interpolate, Seq(v))
       case None =>
         val held = df.columns.filterNot(c => c == tsCol || keys.contains(c)).toSeq
-        (struct((usec(col(tsCol)).as("t_us") +: held.map(col)): _*), holdEmit(held))
+        (struct((usec(col(tsCol)).as("t_us") +: held.map(col)): _*), holdEmit(held),
+          GridSweep.Hold, held)
     }
     if (keys.isEmpty) {
       // the grid size is static whenever start/end are literals (the TQL and
@@ -249,10 +252,11 @@ object TimeSeriesOps {
                                       e0 <- staticUs(df.sparkSession, end)) yield (s0, e0))
       val sampled = bounds.map { case (s0, e0) => (s0, (e0 - s0) / intervalUs) } match {
         case Some((s0, n)) if n >= 0 && n <= SmallGrid =>
-          sampleSmall(df, tsCol, pay, emit, s0, n, intervalUs)
+          sampleSmall(df, tsCol, pay, mode, names, s0, n, intervalUs)
         case _ => sampleChunked(df, tsCol, pay, emit, start, end, intervalUs)
       }
-      // row-key order; on the one-partition small-grid frame a local sort
+      // row-key order; the small-grid sweep already emits it, so the plan
+      // drops this sort there
       return sampled.orderBy(col("ts_ms"))
     }
     val keyCols = keys.map(col)
@@ -306,65 +310,32 @@ object TimeSeriesOps {
 
   /** Unkeyed TIME_SAMPLING for small grids, with data-side work still fully
     * distributed: one hash aggregation folds the series into per-grid-cell
-    * first/last/exact-hit rows (cell j = floor((t-s0)/interval)), and all
-    * window work runs on that grid-bounded frame (≤ 2 rows per touched cell
-    * + n+1 grid rows). For each grid instant g_k:
+    * first/last/exact-hit rows (cell j = floor((t-s0)/interval), clamped to
+    * [-1, n+1]), and one [[GridSweep]] pass over that grid-bounded frame
+    * (at most n + 3 cells) emits the grid. For each grid instant g_k:
     *   prev(g_k) = exact hit at g_k, else last row of the latest non-empty
-    *               cell ≤ k-1  (== latest row with t <= g_k);
-    *   next(g_k) = first row of the earliest non-empty cell ≥ k
+    *               cell <= k-1  (== latest row with t <= g_k);
+    *   next(g_k) = first row of the earliest non-empty cell >= k
     *               (== earliest row with t >= g_k, cell k starting at g_k).
-    * Identical output to the single-window formulation. The cell aggregate
-    * is the plan's only exchange; over a source that reports
-    * `SinglePartition` (a one-partition catalog container) it plans none
-    * either, and the whole read is one job with no exchange. */
+    * The clamp is exact: cell -1's last row is the last row before g_0 and
+    * cell n+1's first row the first row after g_n, and neither cell offers
+    * anything else a grid instant reads. The cell aggregate is the plan's
+    * only exchange; the cells reach the sweep through a no-shuffle
+    * `coalesce(1)`, so over a source that reports `SinglePartition` (a
+    * one-partition catalog container) the whole read is one job with no
+    * exchange. */
   private def sampleSmall(df: DataFrame, tsCol: String, pay: Column,
-                          emit: SampleEmit, s0Us: Long, n: Long,
+                          mode: GridSweep.Mode, names: Seq[String], s0Us: Long, n: Long,
                           intervalUs: Long): DataFrame = {
-    val spark = df.sparkSession
+    val t = usec(col(tsCol))
+    val j = floor((t - lit(s0Us)) / lit(intervalUs.toDouble)).cast("long")
     val cells = df
-      .select(usec(col(tsCol)).as("t_us"), pay.as("pay"))
-      .withColumn("__j",
-        floor((col("t_us") - lit(s0Us)) / lit(intervalUs.toDouble)).cast("long"))
-    val payT = cells.schema("pay").dataType
-    val exact = pmod(col("t_us") - lit(s0Us), lit(intervalUs)) === 0
-    val cellAgg = cells.groupBy("__j").agg(
-      min(col("pay")).as("__first"), max(col("pay")).as("__last"),
-      max(when(exact, col("pay"))).as("__exact"))
-
-    // candidate stream: lastRow(j) becomes a prev-candidate from grid index
-    // j+1 on; exact(j) (prev) and firstRow(j) (next) from index j on; `tie`
-    // makes an exact hit override the previous cell's lastRow and keeps data
-    // candidates ahead of the grid row at the same index in both orderings.
-    // Both entries explode from ONE cell row so the data-side aggregation
-    // (and the parquet scan beneath it) runs once — a union of two selects
-    // over cellAgg would be pruned into two distinct aggregates and scan the
-    // data twice.
-    val nullRow = lit(null).cast(payT)
-    val frame = cellAgg.select(explode(array(
-        struct((col("__j") + 1).as("k"), lit(0).as("tie"),
-          col("__last").as("pc"), nullRow.as("nc")),
-        struct(col("__j").as("k"), lit(1).as("tie"),
-          col("__exact").as("pc"), col("__first").as("nc")))).as("e"))
-      .select(col("e.k").as("k"), col("e.tie").as("tie"),
-        col("e.pc").as("pc"), col("e.nc").as("nc"), lit(0).as("is_grid"))
-      .unionByName(spark.range(0, n + 1, 1, 1).select(col("id").as("k"), lit(2).as("tie"),
-        nullRow.as("pc"), nullRow.as("nc"), lit(1).as("is_grid")))
-      .coalesce(1)
-    // the frame is grid-sized by construction, so it is gathered into ONE
-    // partition without a shuffle (coalesce(1) reports SinglePartition):
-    // both bracketing windows then run there with a local sort each and no
-    // exchange (3 stages -> 2). The constant `__cpart` key stays a named
-    // column so the asc/desc windows read as one partitioning.
-    val wP = Window.partitionBy(col("__cpart")).orderBy(col("k").asc, col("tie").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wN = Window.partitionBy(col("__cpart")).orderBy(col("k").desc, col("tie").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val g = frame.withColumn("__cpart", pmod(col("k"), lit(1)))
-      .withColumn("p", last(col("pc"), ignoreNulls = true).over(wP))
-      .withColumn("nx", last(col("nc"), ignoreNulls = true).over(wN))
-      .filter(col("is_grid") === 1 && col("p").isNotNull && col("nx").isNotNull)
-    val gUs = lit(s0Us) + col("k") * lit(intervalUs)
-    g.select(emit(gUs, col("p"), col("nx")): _*)
+      .select(when(j < -1L, -1L).when(j > n + 1, n + 1).otherwise(j).as("__j"), pay.as("pay"),
+        (pmod(t - lit(s0Us), lit(intervalUs)) === 0).as("__hit"))
+      .groupBy("__j").agg(
+        min(col("pay")).as("__first"), max(col("pay")).as("__last"),
+        max(when(col("__hit"), col("pay"))).as("__exact"))
+    GridSweep(cells, mode, s0Us, intervalUs, n, names)
   }
 
   /** Unkeyed TIME_SAMPLING, scaled out: the series is split into coarse time

@@ -211,7 +211,30 @@ class CatalogLayoutSpec extends SparkTestBase {
 
     val (rangedRows, _, sqlPlans) = traced(s)(ranged(s, "iot"))
     assertClose(rangedRows, expectedRange)
-    assert(sqlPlans.exists(_.contains("BroadcastExchange")), sqlPlans.mkString("\n"))
+    assertOneSweep(sqlPlans)
+  }
+
+  /** Exactly one GridSweep over the traced plans, and none of the window
+    * plan's window, join or broadcast. */
+  private def assertOneSweep(plans: Seq[String]): Unit = {
+    val all = plans.mkString("\n")
+    assert(all.sliding("GridSweep".length).count(_ == "GridSweep") == 1, all)
+    assert(!all.contains("Window") && !all.contains("Join") && !all.contains("BroadcastExchange"), all)
+  }
+
+  test("a one-partition container samples and fills through exactly one GridSweep") {
+    val s = session()
+    val cat = new GraftCatalog(s)
+    cat.createTimeSeries("iot", schema, "ts")
+    cat.put("iot", rows(s, Seeded))
+    val (sampledRows, tqlJobs, tqlPlans) = traced(s)(sampled(cat, "iot"))
+    assertClose(sampledRows, expectedSampling)
+    assert(tqlJobs == Seq(1) && !tqlPlans.mkString.contains("Exchange"), tqlPlans.mkString("\n"))
+    assertOneSweep(tqlPlans)
+    val (rangedRows, sqlJobs, sqlPlans) = traced(s)(ranged(s, "iot"))
+    assertClose(rangedRows, expectedRange)
+    assert(sqlJobs == Seq(1) && !sqlPlans.mkString.contains("Exchange"), sqlPlans.mkString("\n"))
+    assertOneSweep(sqlPlans)
   }
 
   test("update, deleteWhere, remove and TTL expiry give the same rows under both layouts") {

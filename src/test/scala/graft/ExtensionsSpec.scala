@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.functions._
 import graft.engine.GraftExtensions
+import graft.ts.{GridSweepStrategy, GroupByRange, TimeSeriesOps}
 
 /** The two ways graft reaches a session it did not build with
   * `GraftSession`: `withExtensions(new GraftExtensions)` (the shape of a
@@ -45,6 +47,32 @@ class ExtensionsSpec extends SparkTestBase {
       assert(!bare.conf.get("spark.sql.legacy.parquet.nanosAsLong").toBoolean)
       assert(SparkEntry.entry(bare).count() > 0)
       assert(SparkEntry.queries("q_ts_time_window_agg")(bare, sfDir).count() > 0)
+    }
+  }
+
+  test("grid sweeps plan on a bare session through prepare, and with the extension alone") {
+    val names = Seq("q_ts_time_sampling", "q_ts_range_fill_linear")
+    val want = names.map(n => SparkEntry.queries(n)(spark, sfDir).collect().toSeq)
+    assert(want.forall(_.nonEmpty))
+    withNewSession(identity) { bare =>
+      assert(!bare.experimental.extraStrategies.contains(GridSweepStrategy))
+      assert(names.map(n => SparkEntry.queries(n)(bare, sfDir).collect().toSeq) == want)
+      assert(bare.experimental.extraStrategies.contains(GridSweepStrategy))
+    }
+    withNewSession(_.withExtensions(new GraftExtensions)) { s =>
+      import s.implicits._
+      val df = Seq((0L, 1.0), (40L, 5.0), (60L, 9.0)).toDF("sec", "value")
+        .select(timestamp_seconds(col("sec")).as("ts"), col("value"))
+      val sampled = TimeSeriesOps.timeSampling(df, "ts", "value",
+        timestamp_seconds(lit(0L)), timestamp_seconds(lit(60L)), 20L * 1000000L)
+      assert(sampled.as[(Long, Double)].collect().toSeq ==
+        Seq(0L -> 1.0, 20000L -> 3.0, 40000L -> 5.0, 60000L -> 9.0))
+      val filled = GroupByRange(df, "ts", 0L, 60000L, 20000L, Seq(max(col("value")).as("m")),
+        GroupByRange.FillLinear)
+      assert(filled.as[(Long, Option[Double])].collect().toSeq ==
+        Seq(0L -> Some(1.0), 20000L -> Some(3.0), 40000L -> Some(5.0), 60000L -> Some(9.0)))
+      assert(!s.experimental.extraStrategies.contains(GridSweepStrategy))
+      assert(filled.queryExecution.executedPlan.toString.contains("GridSweep"))
     }
   }
 }

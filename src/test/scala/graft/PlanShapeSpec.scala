@@ -36,13 +36,21 @@ class PlanShapeSpec extends SparkTestBase {
       s"a global sort (range exchange) crept into q3\n$plan")
   }
 
-  test("time-sampling: grid-bounded cell path — Range-generated grid, union, NO join") {
+  test("time-sampling: grid-bounded cell path — one GridSweep, no window, NO join") {
     val plan = finalPlan("q_ts_time_sampling")
-    assert(plan.contains("Range ("),
-      s"sampling grid must come from a Range leaf, not a scan\n$plan")
-    assert(plan.contains("Union"), s"grid/data union missing\n$plan")
+    assertOneSweep(plan)
     assert(!plan.contains("Join"),
       s"sampling must stay join-free (cell aggregate, not per-point join)\n$plan")
+  }
+
+  /** The small-grid shape: the cell or bucket aggregate feeds exactly one
+    * GridSweep (final plan), with no window, join or broadcast. */
+  private def assertOneSweep(plan: String): Unit = {
+    assert(occurrences(plan.split("== Initial Plan ==").head, "GridSweep") == 1,
+      s"expected exactly one GridSweep\n$plan")
+    assert(!plan.contains("Window"), s"a window crept back into the grid path\n$plan")
+    assert(!plan.contains("Join"), s"the grid path needs no join\n$plan")
+    assert(!plan.contains("BroadcastExchange"), s"the grid path needs no broadcast\n$plan")
   }
 
   test("minhash: banded self-join pinned shuffle_hash with ONE reused exchange, no broadcast") {
@@ -68,12 +76,9 @@ class PlanShapeSpec extends SparkTestBase {
     assert(!plan.contains("SortMergeJoin"), s"SMJ crept into IVF serving\n$plan")
   }
 
-  test("range-fill linear: windowed fill over a broadcast grid join, no shuffle join") {
+  test("range-fill linear: one GridSweep, no window, no join") {
     val plan = finalPlan("q_ts_range_fill_linear")
-    assert(occurrences(plan, "Window") >= 2,
-      s"prev/next interpolation windows missing\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      s"grid-to-aggregate attach must broadcast\n$plan")
+    assertOneSweep(plan)
     assert(!plan.contains("SortMergeJoin"), s"SMJ crept into fill\n$plan")
   }
 
@@ -98,8 +103,8 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("range-fill linear: one-partition grid — the aggregate's exchange is the only one") {
     val plan = finalSection("q_ts_range_fill_linear")
-    // the small grid is one Range slice joined to the broadcast aggregate,
-    // so the fill windows and the ORDER BY need no exchange of their own
+    // the bucket aggregate reaches the sweep through a no-shuffle
+    // coalesce(1), so the sweep and the ORDER BY need no exchange of their own
     assert(occurrences(plan, "hashpartitioning") == 1,
       s"expected only the bucket aggregate's hash exchange\n$plan")
     assert(!plan.contains("rangepartitioning"),
@@ -108,8 +113,8 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("time-sampling: one-partition frame — the cell aggregate's exchange is the only one") {
     val plan = finalSection("q_ts_time_sampling")
-    // grid + cell frame coalesce into one partition without a shuffle, so
-    // both bracketing windows run there with no exchange
+    // the cell frame coalesces into one partition without a shuffle, so
+    // the sweep runs there with no exchange
     assert(occurrences(plan, "hashpartitioning") == 1,
       s"expected only the cell aggregate's hash exchange\n$plan")
     assert(!plan.contains("rangepartitioning"),
