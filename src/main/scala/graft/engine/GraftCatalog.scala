@@ -2,6 +2,10 @@ package graft.engine
 
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, NullsFirst, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.GraftSqlBridge
@@ -25,6 +29,15 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, IntegerType, MapType, 
   * kept as ONE partition that Catalyst knows is one (`SinglePartition`), so
   * DML and the IoT reads over it plan no exchange; a bigger one keeps the
   * shuffle layout.
+  *
+  * Runs and the fold: a one-partition TimeSeries keyed on its TIMESTAMP
+  * column is a checkpoint plus up to `MaxRuns` appended runs. A `put`
+  * whose batch is a driver-side `LocalRelation` with keys above every
+  * stored key cannot collide, so it becomes one more sorted run read after
+  * the checkpoint in the same partition (GridDB appends rows to its chunk
+  * store the same way): no Spark job, no rewrite. The run's rows stay on
+  * the driver, inside the run's RDD, until a fold. Every other write is
+  * the fold: it rewrites checkpoint and runs into one new checkpoint.
   *
   * Concurrency: writes to one container are serialized (GridDB serializes
   * writes per container) — each DML reads the stored frame, runs its job
@@ -141,13 +154,12 @@ final class GraftCatalog(spark: SparkSession) {
   /** Fire the table's triggers for `event`. The affected-row count is
     * computed ONCE and only when at least one trigger matches — tables
     * without triggers pay nothing on the put/remove hot path. */
-  private def fireTriggers(table: String, event: String,
-                           affected: => DataFrame): Unit = {
+  private def fireTriggers(table: String, event: String, affected: => Long): Unit = {
     val matching = triggers.synchronized {
       triggers.values.filter(t => t.table == table && t.eventTypes.contains(event)).toSeq
     }
     if (matching.nonEmpty) {
-      val n = affected.count()
+      val n = affected
       matching.foreach(t => notifier(TriggerEvent(t, event, n)))
     }
   }
@@ -168,7 +180,7 @@ final class GraftCatalog(spark: SparkSession) {
 
   def register(c: Container): Container = writing(c.name) {
     containers.synchronized { containers(c.name) = c }
-    c.df.createOrReplaceTempView(c.name)
+    GraftSqlBridge.replaceTempView(c.df, c.name)
     c
   }
 
@@ -199,40 +211,63 @@ final class GraftCatalog(spark: SparkSession) {
   /** Cut lineage after DML without pulling rows to the driver: an eager
     * `localCheckpoint` materializes each partition on its executor (blocks
     * stay distributed; the ContextCleaner reclaims superseded checkpoints).
-    * The same job measures the bytes it stores (an observed aggregate, read
-    * back once the job has finished: no extra job), which the next DML's
-    * layout rule reads; a result of one partition is published as
-    * `SinglePartition`, so aggregates and windows over the container plan
-    * no exchange.
+    * The same job measures the bytes it stores and, for a container keyed
+    * on its TIMESTAMP time column, its largest key (observed aggregates,
+    * read back once the job has finished: no extra job); the next DML's
+    * layout rule reads the bytes, the next put's append path the key. A
+    * result of one partition is published as `SinglePartition`, so
+    * aggregates and windows over the container plan no exchange. This is
+    * also the fold: `df` reads the pending runs, and the result has none.
     * Repeated put/update/delete therefore stack O(1) plan depth while the
     * data itself never leaves the cluster — the property the reference's
     * DMLProcessor has by writing through the chunk store
     * (/root/reference/server/sql_processor_dml.h:39). */
   private def materialize(c: Container, df: DataFrame): Container = {
-    val observed = df.observe(StoredBytes, storedBytes(df.schema))
+    val key = timeKey(c, df.schema)
+    val observed = df.observe(StoredBytes, storedBytes(df.schema).as("bytes"),
+      key.map(k => max(unix_micros(quoted(k)))).getOrElse(lit(null).cast("long")).as("max_key"))
     val cp = observed.localCheckpoint()
-    c.copy(df = GraftSqlBridge.asSinglePartition(cp),
-      bytes = observed.queryExecution.observedMetrics.get(StoredBytes).map(_.getLong(0)))
+    val m = observed.queryExecution.observedMetrics.get(StoredBytes)
+    c.copy(df = GraftSqlBridge.asSinglePartition(cp), bytes = m.map(_.getLong(0)),
+      maxKey = m.filterNot(_.isNullAt(1)).map(_.getLong(1)), runs = 0)
   }
 
   private val StoredBytes = "graft_stored_bytes"
 
-  /** Aggregate: the bytes rows of `schema` take in Spark's row format — 8
-    * bytes of null bits (per 64 columns) and 8 per column, plus each string
-    * or binary value's own length, measured (Spark's row-width estimate
-    * counts any string as 20 bytes); a nested value counts its type's
-    * default size. */
+  private def quoted(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
+  /** Per-row bytes of `schema` that do not depend on the values: 8 bytes
+    * of null bits (per 64 columns) and 8 per column, plus a nested column's
+    * type default size. */
+  private def fixedRowBytes(schema: StructType): Long =
+    8L * ((schema.size + 63) / 64 + schema.size) + schema.fields.map(_.dataType).collect {
+      case t @ (_: ArrayType | _: MapType | _: StructType) => t.defaultSize.toLong
+    }.sum
+
+  /** Aggregate: the bytes rows of `schema` take in Spark's row format —
+    * [[fixedRowBytes]] plus each string or binary value's own length,
+    * measured (Spark's row-width estimate counts any string as 20 bytes).
+    * [[rowBytes]] is the same count taken on the driver. */
   private def storedBytes(schema: StructType): Column = {
-    val fixed = 8L * ((schema.size + 63) / 64 + schema.size)
-    val row = schema.fields.foldLeft(lit(fixed)) { (b, f) =>
-      val c = col("`" + f.name.replace("`", "``") + "`")
+    val row = schema.fields.foldLeft(lit(fixedRowBytes(schema))) { (b, f) =>
       f.dataType match {
-        case _: StringType | BinaryType => b + coalesce(octet_length(c), lit(0))
-        case _: ArrayType | _: MapType | _: StructType => b + f.dataType.defaultSize
+        case _: StringType | BinaryType => b + coalesce(octet_length(quoted(f.name)), lit(0))
         case _ => b
       }
     }
     coalesce(sum(row), lit(0L))
+  }
+
+  /** [[storedBytes]] of one row, counted on the driver. */
+  private def rowBytes(schema: StructType): InternalRow => Long = {
+    val fixed = fixedRowBytes(schema)
+    val varying = schema.fields.zipWithIndex.collect {
+      case (f, i) if f.dataType.isInstanceOf[StringType] =>
+        (r: InternalRow) => if (r.isNullAt(i)) 0L else r.getUTF8String(i).numBytes.toLong
+      case (f, i) if f.dataType == BinaryType =>
+        (r: InternalRow) => if (r.isNullAt(i)) 0L else r.getBinary(i).length.toLong
+    }
+    r => varying.foldLeft(fixed)((b, f) => b + f(r))
   }
 
   /** The layout rule: `c` stays ONE partition while its stored bytes, plus
@@ -244,38 +279,107 @@ final class GraftCatalog(spark: SparkSession) {
     * `spark.sql.adaptive.advisoryPartitionSizeInBytes`. Inside it the
     * shuffle path would end in one partition anyway, so the one-partition
     * path gives up no parallelism after its merge. An unmeasured container,
-    * or a batch whose size Spark cannot estimate, keeps the shuffle path.
-    * Inside the budget DML gathers its input with a no-shuffle
-    * `coalesce(1)`. */
-  private def onePartition(c: Container, df: DataFrame,
-                           incoming: Option[DataFrame] = None): DataFrame = {
+    * or a batch whose size Spark cannot estimate, keeps the shuffle path. */
+  private def fitsOnePartition(c: Container, incoming: Option[DataFrame]): Boolean = {
     def bytesConf(key: String) = JavaUtils.byteStringAsBytes(spark.conf.get(key))
     val minSize = bytesConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE.key)
     val budget =
       if (spark.conf.get(SQLConf.COALESCE_PARTITIONS_PARALLELISM_FIRST.key).toBoolean) minSize
       else minSize max bytesConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES.key)
     val batch = incoming.fold(BigInt(0))(_.queryExecution.analyzed.stats.sizeInBytes)
-    if (c.bytes.exists(b => BigInt(b) + batch <= budget)) df.coalesce(1) else df
+    c.bytes.exists(b => BigInt(b) + batch <= budget)
   }
 
+  /** DML input under the layout rule: inside the budget it is gathered
+    * with a no-shuffle `coalesce(1)`. */
+  private def onePartition(c: Container, df: DataFrame,
+                           incoming: Option[DataFrame] = None): DataFrame =
+    if (fitsOnePartition(c, incoming)) df.coalesce(1) else df
+
+  /** The time column of a TimeSeries keyed on it, when it is a TIMESTAMP
+    * in `schema`: the key whose maximum the catalog tracks and by which
+    * the append path orders runs. */
+  private def timeKey(c: Container, schema: StructType): Option[String] =
+    c.timeColumn.filter(tc => c.kind == TimeSeries && c.keyColumns == Seq(tc) &&
+      schema.find(_.name == tc).exists(_.dataType == TimestampType))
+
+  /** Runs a container holds before its next put folds them. */
+  private val MaxRuns = 8
+
+  /** The append path of `put`: `batch` (the optimized plan of `rows`)
+    * becomes one more run of `c`, sorted by key and read after the stored
+    * rows in the same partition, when it cannot collide with a stored key
+    * and the container is, and stays, one partition. The rows are
+    * already on the driver, so no Spark job or SQL execution runs; the
+    * run's bytes are counted here. None, and nothing changed, when any
+    * condition fails. */
+  private def appendRun(c: Container, rows: DataFrame,
+                        batch: Option[LocalRelation]): Option[Container] =
+    (c.df.queryExecution.logical, batch, timeKey(c, c.df.schema), c.bytes) match {
+      case (stored: LogicalRDD, Some(local), Some(tc), Some(bytes))
+          if c.runs < MaxRuns && (c.maxKey.isDefined || bytes == 0L) && local.data.nonEmpty &&
+            stored.rdd.partitions.length <= 1 &&
+            local.output.map(a => (a.name, a.dataType)) == stored.output.map(a => (a.name, a.dataType)) &&
+            fitsOnePartition(c, Some(rows)) =>
+        val k = stored.output.indexWhere(_.name == tc)
+        if (local.data.exists(_.isNullAt(k))) None
+        else {
+          val toUnsafe = UnsafeProjection.create(local.schema)
+          val run = local.data.map(r => toUnsafe(r).copy()).sortBy(_.getLong(k))
+          val keys = run.map(_.getLong(k))
+          val above = keys.head > c.maxKey.getOrElse(Long.MinValue) &&
+            keys.iterator.zip(keys.iterator.drop(1)).forall { case (a, b) => a < b }
+          Option.when(above) {
+            val key = stored.output(k)
+            // the stored rows come first and every run is sorted above
+            // them, so an ascending key order survives the append
+            val sorted = bytes == 0L || stored.outputOrdering.headOption.exists(o =>
+              o.child.semanticEquals(key) && o.direction == Ascending && o.nullOrdering == NullsFirst)
+            val ordering = if (sorted) Seq(SortOrder(key, Ascending)) else Nil
+            val output = stored.output.zip(local.output).map { case (a, b) =>
+              if (b.nullable && !a.nullable) a.withNullability(true) else a }
+            val stats = Statistics(stored.stats.sizeInBytes + local.stats.sizeInBytes,
+              for (a <- stored.stats.rowCount) yield a + run.size)
+            // one partition reading the stored rows, then the run: the
+            // stored partition is the only one with a preferred location,
+            // and Spark's coalescer places located partitions first and
+            // keeps the rest in order
+            val rdd = stored.rdd.union(spark.sparkContext.parallelize[InternalRow](run, 1))
+              .coalesce(1)
+            register(c.copy(
+              df = GraftSqlBridge.republish(spark, stored, rdd, output, ordering, stats),
+              bytes = Some(bytes + run.iterator.map(rowBytes(local.schema)).sum),
+              maxKey = Some(keys.last), runs = c.runs + 1))
+          }
+        }
+      case _ => None
+    }
+
   /** INSERT OR REPLACE by row key (PUT semantics). Rows with keys already
-    * present replace the stored rows; unkeyed containers append. */
+    * present replace the stored rows; unkeyed containers append. A
+    * driver-side batch above every stored key of a one-partition TimeSeries
+    * takes the append path ([[appendRun]]: no job); every other put, and
+    * the put after `MaxRuns` appends, rewrites the container with its runs
+    * through one job ([[materialize]]). */
   def put(name: String, rows: DataFrame): Container = {
+    val local = Some(rows.queryExecution.optimizedPlan).collect { case l: LocalRelation => l }
     val out = writing(name) {
       val c = get(name)
-      val merged =
-        if (c.keyColumns.isEmpty) onePartition(c, c.df.unionByName(rows), Some(rows))
-        else {
-          val tagged = onePartition(c, c.df.withColumn("__gen", lit(0))
-            .unionByName(rows.withColumn("__gen", lit(1))), Some(rows))
-          val w = Window.partitionBy(c.keyColumns.map(col): _*)
-            .orderBy(col("__gen").desc)
-          tagged.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1).drop("__gen", "__rn")
-        }
-      register(materialize(c, merged))
+      appendRun(c, rows, local).getOrElse {
+        val merged =
+          if (c.keyColumns.isEmpty) onePartition(c, c.df.unionByName(rows), Some(rows))
+          else {
+            val tagged = onePartition(c, c.df.withColumn("__gen", lit(0))
+              .unionByName(rows.withColumn("__gen", lit(1))), Some(rows))
+            val w = Window.partitionBy(c.keyColumns.map(col): _*)
+              .orderBy(col("__gen").desc)
+            tagged.withColumn("__rn", row_number().over(w))
+              .filter(col("__rn") === 1).drop("__gen", "__rn")
+          }
+        register(materialize(c, merged))
+      }
     }
-    fireTriggers(name, "PUT", rows)
+    fireTriggers(name, "PUT", local.fold(rows.count())(_.data.size.toLong))
     out
   }
 
@@ -516,7 +620,7 @@ final class GraftCatalog(spark: SparkSession) {
         .map { case (k, v) => col(k) === lit(v) }.reduce(_ && _)
       (register(materialize(c, onePartition(c, c.df.filter(!cond)))), c.df.filter(cond))
     }
-    fireTriggers(name, "DELETE", removed)
+    fireTriggers(name, "DELETE", removed.count())
     out
   }
 
@@ -539,7 +643,7 @@ final class GraftCatalog(spark: SparkSession) {
       val c = get(name)
       (register(materialize(c, onePartition(c, c.df.filter(!hit)))), c.df.filter(hit))
     }
-    fireTriggers(name, "DELETE", removed)
+    fireTriggers(name, "DELETE", removed.count())
     out
   }
 
@@ -882,3 +986,4 @@ final class GraftCatalog(spark: SparkSession) {
 
   def listContainers: Seq[String] = containers.synchronized { containers.keys.toSeq }
 }
+

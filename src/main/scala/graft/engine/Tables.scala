@@ -64,7 +64,15 @@ final case class Container(
     // bytes the frame held when the catalog last wrote it, measured on that
     // write's own job; None = unknown (the catalog's layout rule then keeps
     // the shuffle path)
-    bytes: Option[Long] = None)
+    bytes: Option[Long] = None,
+    // a TimeSeries keyed on its TIMESTAMP column: the largest stored key in
+    // epoch microseconds, observed on the write that stored it (the rewrite
+    // path's job, or the appended batch on the driver); None = unknown or
+    // no non-null key
+    maxKey: Option[Long] = None,
+    // batches appended since the last rewrite: one-partition runs the
+    // stored frame reads after its checkpoint (see GraftCatalog.put)
+    runs: Int = 0)
 
 /** Loader / catalog for the driver-provided TESTDATA star schema.
   *

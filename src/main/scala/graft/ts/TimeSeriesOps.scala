@@ -309,7 +309,9 @@ object TimeSeriesOps {
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Unkeyed TIME_SAMPLING for small grids, with data-side work still fully
-    * distributed: one hash aggregation folds the series into per-grid-cell
+    * distributed: one hash aggregation ([[StructExtreme]], which plans an
+    * `ObjectHashAggregate` where `min`/`max` of a struct would sort every
+    * row) folds the series into per-grid-cell
     * first/last/exact-hit rows (cell j = floor((t-s0)/interval), clamped to
     * [-1, n+1]), and one [[GridSweep]] pass over that grid-bounded frame
     * (at most n + 3 cells) emits the grid. For each grid instant g_k:
@@ -331,10 +333,11 @@ object TimeSeriesOps {
     val j = floor((t - lit(s0Us)) / lit(intervalUs.toDouble)).cast("long")
     val cells = df
       .select(when(j < -1L, -1L).when(j > n + 1, n + 1).otherwise(j).as("__j"), pay.as("pay"),
-        (pmod(t - lit(s0Us), lit(intervalUs)) === 0).as("__hit"))
+        when(pmod(t - lit(s0Us), lit(intervalUs)) === 0, pay).as("__hit"))
       .groupBy("__j").agg(
-        min(col("pay")).as("__first"), max(col("pay")).as("__last"),
-        max(when(col("__hit"), col("pay"))).as("__exact"))
+        StructExtreme.of("pay", greatest = false).as("__first"),
+        StructExtreme.of("pay", greatest = true).as("__last"),
+        StructExtreme.of("__hit", greatest = true).as("__exact"))
     GridSweep(cells, mode, s0Us, intervalUs, n, names)
   }
 

@@ -150,10 +150,10 @@ class CatalogLayoutSpec extends SparkTestBase {
     assert(reportsSinglePartition(cat.get("iot").df),
       cat.get("iot").df.queryExecution.sparkPlan.toString)
 
+    // keys above every stored key: the put appends a run, no job, no query
     val (_, putJobs, putPlans) = traced(s)(cat.put("iot", rows(s, Seeded.filter(_ >= 500))))
-    assert(putJobs == Seq(1), s"put: one job of one stage, got stage counts $putJobs")
-    assert(putPlans.nonEmpty && putPlans.forall(!_.contains("Exchange")),
-      s"put planned an exchange:\n${putPlans.mkString("\n")}")
+    assert(putJobs.isEmpty && putPlans.isEmpty,
+      s"an in-order put ran stage counts $putJobs, queries:\n${putPlans.mkString("\n")}")
     assert(reportsSinglePartition(cat.get("iot").df))
     assert(cat.get("iot").df.count() == Seeded.size)
 
@@ -166,6 +166,14 @@ class CatalogLayoutSpec extends SparkTestBase {
     assertClose(rangedRows, expectedRange)
     assert(sqlJobs == Seq(1), s"GROUP BY RANGE: one job of one stage, got $sqlJobs")
     assert(sqlPlans.size == 1 && !sqlPlans.head.contains("Exchange"), sqlPlans.mkString("\n"))
+
+    // keys that overlap stored ones (same values): the put rewrites
+    val (_, overJobs, overPlans) = traced(s)(cat.put("iot", rows(s, Seeded.filter(_ >= 590))))
+    assert(overJobs == Seq(1), s"put: one job of one stage, got stage counts $overJobs")
+    assert(overPlans.nonEmpty && overPlans.forall(!_.contains("Exchange")),
+      s"put planned an exchange:\n${overPlans.mkString("\n")}")
+    assert(reportsSinglePartition(cat.get("iot").df))
+    assert(cat.get("iot").df.count() == Seeded.size)
   }
 
   test("the layout rule compares the measured stored bytes with AQE's one-partition size") {

@@ -1,5 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
 import graft.engine._
 
 /** JMS trigger transport (gridstore.h GS_TRIGGER_JMS + :859-868 destination
@@ -21,6 +27,34 @@ class JmsTriggerSpec extends SparkTestBase {
     }
   }
 
+  /** The jobs `body` launches. The listener bus is asynchronous and
+    * delivers events queued before a listener was added, so a tagged
+    * sentinel job before and after `body` marks what is `body`'s. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val id = java.util.UUID.randomUUID().toString
+    val starts = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    def mark(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!starts.contains(tag) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(starts.contains(tag), s"job listener never saw $tag")
+    }
+    sc.addSparkListener(listener)
+    try {
+      mark(s"start_$id")
+      body
+      mark(s"end_$id")
+    } finally sc.removeSparkListener(listener)
+    starts.asScala.toSeq.dropWhile(_ != s"start_$id").indexOf(s"end_$id") - 1
+  }
+
   test("JMS trigger fires through the seam with destination, credentials and payload") {
     import spark.implicits._
     val cat = GraftCatalog.forSession(spark)
@@ -37,7 +71,10 @@ class JmsTriggerSpec extends SparkTestBase {
         jmsDestinationType = Some("topic"), jmsDestinationName = Some("graft.events"),
         user = Some("u1"), password = Some("p1")))
 
-      cat.put("jms_tab", Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v"))
+      // the put's own rewrite is its one job: the trigger's row count is
+      // the local batch's, counted on the driver
+      val jobs = jobsOf(cat.put("jms_tab", Seq((1L, 1.0), (2L, 2.0)).toDF("id", "v")))
+      assert(jobs == 1, s"a triggered put ran $jobs jobs")
       val got = sender.sent.toList
       assert(got.size == 1, s"expected one JMS send, got $got")
       val (dtype, dest, user, pass, body) = got.head
