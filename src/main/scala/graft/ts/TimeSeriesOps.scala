@@ -18,9 +18,11 @@ import org.apache.spark.sql.functions._
   * All operators accept optional partition `keys`. GridDB's TimeSeries is a
   * single container, i.e. `keys = Nil`; at 100 TB one series per device/user
   * is the realistic layout, so every operator is written to scale out over
-  * `keys` (window partitioning / groupBy) and only degenerates to a single
-  * partition when keys are empty — matching the reference's per-container
-  * semantics.
+  * `keys` (window partitioning / groupBy, or the grid sweep clustered on
+  * them) and only degenerates to a single partition when keys are empty —
+  * matching the reference's per-container semantics. Every time grid
+  * (TIME_SAMPLING here, the GROUP BY RANGE fill in [[GroupByRange]]) is one
+  * [[GridSweep]] pass per series over a grid-bounded aggregate.
   *
   * Time arithmetic is done on epoch MICROSECONDS (Spark's native timestamp
   * resolution) so interpolation weights are exact and reproducible.
@@ -84,38 +86,29 @@ object TimeSeriesOps {
       .select((usec(t) / lit(1000)).cast("long").as("ts_ms"), value.as(valCol))
   }
 
-  // ---- TIME_SAMPLING engine ------------------------------------------------
-  // Both sampling forms share one bracketing engine over a *payload* struct
-  // whose first field is t_us (epoch µs): struct ordering is (timestamp, then
-  // the remaining fields), so ties between rows at the same instant resolve
+  // ---- TIME_SAMPLING ------------------------------------------------------
+  // Every sampling form is one [[GridSweep]] over a *payload* struct whose
+  // first field is t_us (epoch µs): struct ordering is (timestamp, then the
+  // remaining fields), so ties between rows at the same instant resolve
   // deterministically (greatest row wins on the prev side, least on next).
-  //  - named-column form: payload = (t_us, v); the emitter interpolates.
+  //  - named-column form: payload = (t_us, v); the sweep interpolates.
   //  - star form TIME_SAMPLING(*): payload = (t_us, <all held columns>); the
-  //    emitter re-emits the bracketing row's fields unchanged. This is
+  //    sweep re-emits the bracketing row's fields unchanged. This is
   //    sample-and-hold, NOT per-column interpolation: the reference's star
   //    path leaves the interpolated value unset (tmpRow.value stays NULL when
   //    columnId == UNDEF_COLUMNID, selection_func_impl.h:620-673) and outputs
   //    the previous row's full image with only field 0 replaced by the grid
   //    instant (selection_func_impl.h:700-713).
-
-  /** Emits the output columns of one grid row from
-    * (gridInstantUs, prevPayload, nextPayload). */
-  private type SampleEmit = (Column, Column, Column) => Seq[Column]
+  //  - EMPTY mode, either payload: the exact-match row's fields, else nulls.
 
   /** TIME_SAMPLING(valCol, start, end, interval): resample the series onto a
     * regular grid; at each grid instant emit the exact value if a row exists,
     * else the linear interpolation between neighbors; grid points outside the
-    * observed range produce no row.
-    *
-    * Implemented shuffle-lean: the grid is unioned with the data and a single
-    * window pass (per key) computes the bracketing rows — no join per grid
-    * point. Keyed series scale by window partitioning; an unkeyed
-    * (whole-container) grid of at most `SmallGrid` points is one
-    * [[GridSweep]] pass over a grid-bounded cell aggregate — see
-    * [[sampleSmall]] — and a larger one is chunked into coarse time slices
-    * with boundary-anchor stitching — see [[sampleChunked]] — so a single
-    * giant series never serializes onto one core. Unkeyed rows come back in
-    * ascending `ts_ms`, the row-key order of a GridDB TimeSeries result.
+    * observed range produce no row. `start` and `end` must be literal
+    * timestamps (all TQL and SQL surfaces produce literals); start later
+    * than end gives no rows. One grid sweep per series — see [[sample]].
+    * Rows come back in (keys, `ts_ms`) order, the row-key order of a GridDB
+    * TimeSeries result.
     */
   def timeSampling(df: DataFrame, tsCol: String, valCol: String,
                    start: Column, end: Column, intervalUs: Long,
@@ -127,7 +120,7 @@ object TimeSeriesOps {
     * else the latest earlier row, with the timestamp replaced by the grid
     * instant; grid points outside the observed range produce no row. Matches
     * the reference star path (selection_func_impl.h:599-713), which emits the
-    * bracketing row's image un-interpolated (see engine note above). Output:
+    * bracketing row's image un-interpolated (see the note above). Output:
     * (keys..., ts_ms, <every non-key column held>). */
   def timeSamplingHold(df: DataFrame, tsCol: String,
                        start: Column, end: Column, intervalUs: Long,
@@ -141,296 +134,92 @@ object TimeSeriesOps {
     * [[timeInterpolated]]'s "empty" mode). The in-range rule matches the
     * other sampling forms: grid points outside the series' observed
     * [min ts, max ts] produce no row. Ties at one instant resolve to the
-    * greatest value — the same greatest-row rule the bracketing engine
-    * applies on the prev side.
-    *
-    * Shape: one tiny per-series bounds aggregate generates the clipped
-    * grid, one per-instant aggregate collapses ties, one left join lines
-    * them up — no window, no per-grid-point join. */
+    * greatest value — the same greatest-row rule the other forms apply on
+    * the prev side. */
   def timeSamplingEmpty(df: DataFrame, tsCol: String, valCol: String,
                         start: Column, end: Column, intervalUs: Long,
-                        keys: Seq[String] = Nil): DataFrame = {
-    val kcols = keys.map(col)
-    val grid = emptyGrid(df, tsCol, start, end, intervalUs, keys)
-    val exact = (if (keys.isEmpty)
-        df.groupBy(usec(col(tsCol)).as("__g_us"))
-      else
-        df.groupBy((kcols :+ usec(col(tsCol)).as("__g_us")): _*))
-      .agg(max(col(valCol).cast("double")).as("__v"))
-    grid.join(exact, keys :+ "__g_us", "left")
-      .select((kcols :+ (col("__g_us") / lit(1000)).cast("long").as("ts_ms") :+
-        col("__v").as(valCol)): _*)
-  }
+                        keys: Seq[String] = Nil): DataFrame =
+    sample(df, tsCol, Some(valCol), start, end, intervalUs, keys, None, empty = true)
 
   /** Star form of [[timeSamplingEmpty]]: every non-key column carried
     * from the exact-match row, or NULL — the reference's EMPTY rule
     * verbatim ("an empty value ... for all Row fields except Row keys",
     * InterpolationMode.java:70). Ties at one instant resolve to the
-    * greatest full row image (struct order), matching the bracketing
-    * engine's star path. Output: (keys..., ts_ms, <held columns>). */
+    * greatest full row image (struct order), as in the star form of
+    * [[timeSamplingHold]]. Output: (keys..., ts_ms, <held columns>). */
   def timeSamplingEmptyAll(df: DataFrame, tsCol: String,
                            start: Column, end: Column, intervalUs: Long,
-                           keys: Seq[String] = Nil): DataFrame = {
-    val held = df.columns.filterNot(c => c == tsCol || keys.contains(c)).toSeq
-    val kcols = keys.map(col)
-    val grid = emptyGrid(df, tsCol, start, end, intervalUs, keys)
-    val exact = (if (keys.isEmpty)
-        df.groupBy(usec(col(tsCol)).as("__g_us"))
-      else
-        df.groupBy((kcols :+ usec(col(tsCol)).as("__g_us")): _*))
-      .agg(max(struct(held.map(col): _*)).as("__row"))
-    grid.join(exact, keys :+ "__g_us", "left")
-      .select((kcols :+ (col("__g_us") / lit(1000)).cast("long").as("ts_ms")) ++
-        held.map(c => col(s"__row.$c").as(c)): _*)
-  }
+                           keys: Seq[String] = Nil): DataFrame =
+    sample(df, tsCol, None, start, end, intervalUs, keys, None, empty = true)
 
-  /** The clipped grid shared by the EMPTY-mode sampling forms:
-    * (keys..., __g_us) for every grid instant inside the series'
-    * observed range. */
-  private def emptyGrid(df: DataFrame, tsCol: String,
-                        start: Column, end: Column, intervalUs: Long,
-                        keys: Seq[String]): DataFrame = {
-    require(intervalUs > 0, "sampling interval must be positive")
-    val kcols = keys.map(col)
-    val s = usec(start.cast("timestamp"))
-    val e = usec(end.cast("timestamp"))
-    val bounds = if (keys.isEmpty)
-      df.agg(min(usec(col(tsCol))).as("__lo"), max(usec(col(tsCol))).as("__hi"))
-    else
-      df.groupBy(kcols: _*).agg(min(usec(col(tsCol))).as("__lo"), max(usec(col(tsCol))).as("__hi"))
-    // start later than end excludes every row (TimeSeries.java:495) — an
-    // empty sequence, not a descending one
-    val steps = when(e >= s,
-      sequence(lit(0L), floor((e - s).cast("double") / intervalUs).cast("long")))
-      .otherwise(array().cast("array<bigint>"))
-    bounds
-      .select((kcols :+ col("__lo") :+ col("__hi") :+ explode(steps).as("__i")): _*)
-      .select((kcols :+ (s + col("__i") * intervalUs).as("__g_us") :+
-        col("__lo") :+ col("__hi")): _*)
-      .filter(col("__g_us") >= col("__lo") && col("__g_us") <= col("__hi"))
-      .select((kcols :+ col("__g_us")): _*)
-  }
-
-  private def interpPay(tsCol: String, valCol: String): Column =
-    struct(usec(col(tsCol)).as("t_us"), col(valCol).cast("double").as("v"))
-
-  private def interpEmit(valCol: String): SampleEmit = (g, p, n) => {
-    val (pT, pV) = (p.getField("t_us"), p.getField("v"))
-    val (nT, nV) = (n.getField("t_us"), n.getField("v"))
-    Seq((g / lit(1000)).cast("long").as("ts_ms"),
-      when(nT === pT, pV).otherwise(pV + (nV - pV) *
-        ((g - pT).cast("double") / (nT - pT).cast("double"))).as(valCol))
-  }
-
-  private def holdEmit(held: Seq[String]): SampleEmit = (g, p, _) =>
-    (g / lit(1000)).cast("long").as("ts_ms") +: held.map(c => p.getField(c).as(c))
-
-  /** The core of [[timeSampling]] (`valCol` interpolated) and
-    * [[timeSamplingHold]] (`valCol` None: every non-key column held).
-    * `static`: the bounds as epoch micros when the caller already holds them
-    * (the TQL compiler's TIMESTAMP() literals); None folds them from
-    * `start`/`end` when the series is unkeyed. */
-  private[graft] def sample(df: DataFrame, tsCol: String, valCol: Option[String],
-                            start: Column, end: Column, intervalUs: Long,
-                            keys: Seq[String], static: Option[(Long, Long)]): DataFrame = {
-    require(intervalUs > 0, "TIME_SAMPLING interval must be positive")
-    val (pay, emit, mode, names) = valCol match {
-      case Some(v) => (interpPay(tsCol, v), interpEmit(v), GridSweep.Interpolate, Seq(v))
-      case None =>
-        val held = df.columns.filterNot(c => c == tsCol || keys.contains(c)).toSeq
-        (struct((usec(col(tsCol)).as("t_us") +: held.map(col)): _*), holdEmit(held),
-          GridSweep.Hold, held)
-    }
-    if (keys.isEmpty) {
-      // the grid size is static whenever start/end are literals (the TQL and
-      // SQL surfaces only produce literals): small grids take the reduced
-      // cell-aggregate path — whose shuffled frame is bounded by the GRID,
-      // not the data, so it is scale-safe at any data volume — big grids the
-      // chunked one; the chunked plan's 5-6 extra stages are pure overhead
-      // against a few hundred points
-      val bounds = static.orElse(for (s0 <- staticUs(df.sparkSession, start);
-                                      e0 <- staticUs(df.sparkSession, end)) yield (s0, e0))
-      val sampled = bounds.map { case (s0, e0) => (s0, (e0 - s0) / intervalUs) } match {
-        case Some((s0, n)) if n >= 0 && n <= SmallGrid =>
-          sampleSmall(df, tsCol, pay, mode, names, s0, n, intervalUs)
-        case _ => sampleChunked(df, tsCol, pay, emit, start, end, intervalUs)
-      }
-      // row-key order; the small-grid sweep already emits it, so the plan
-      // drops this sort there
-      return sampled.orderBy(col("ts_ms"))
-    }
-    val keyCols = keys.map(col)
-    val data = df.select(
-      (keyCols :+ usec(col(tsCol)).as("t_us")
-        :+ pay.as("pay") :+ lit(0).as("is_grid")): _*)
-    val payT = data.schema("pay").dataType
-    val gridTimes = explode(sequence(usec(start), usec(end), lit(intervalUs))).as("t_us")
-    val grid = df.select(keyCols: _*).distinct()
-      .select((keyCols :+ gridTimes :+ lit(null).cast(payT).as("pay") :+ lit(1).as("is_grid")): _*)
-
-    // grid rows sort after data rows at the same instant (exact match wins)
-    val all = data.unionByName(grid)
-    val wAsc = Window.partitionBy(keyCols: _*)
-      .orderBy(col("t_us").asc, col("is_grid").asc, col("pay").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wDesc = Window.partitionBy(keyCols: _*)
-      .orderBy(col("t_us").desc, col("is_grid").asc, col("pay").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bracket(all, wAsc, wDesc)
-      .select((keyCols ++ emit(col("t_us"), col("p"), col("nx"))): _*)
-  }
-
-  /** Grid points per time chunk in the unkeyed chunked paths: large enough
-    * that the per-chunk stitch frame (one row per chunk) stays tiny, small
-    * enough that one chunk is far below a task's memory. */
-  private val ChunkPoints = 256L
-
-  /** Grid-size threshold below which the unkeyed paths use the grid-bounded
-    * single-frame formulation instead of chunking (a grid this small fits one
-    * task trivially; the chunked plan's extra stages would dominate). */
-  private[ts] val SmallGrid = 10000L
-
-  /** Statically evaluate a timestamp Column to epoch micros when it is a
-    * literal expression (all TQL/SQL surfaces produce literals). Resolution +
-    * constant folding run driver-side on a one-row plan — no job is executed.
-    * Each call still costs one analyze + optimize round trip.
-    * Non-foldable columns yield None. */
-  private def staticUs(spark: org.apache.spark.sql.SparkSession,
-                       c: Column): Option[Long] =
-    try {
-      import org.apache.spark.sql.catalyst.expressions.{Alias, Literal => CLit}
-      import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
-      spark.range(1).select(unix_micros(c)).queryExecution.optimizedPlan match {
-        case l: LocalRelation =>
-          l.data.headOption.collect { case r if !r.isNullAt(0) => r.getLong(0) }
-        case Project(Seq(Alias(CLit(v: Long, _), _)), _) => Some(v)
-        case _ => None
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Unkeyed TIME_SAMPLING for small grids, with data-side work still fully
-    * distributed: one hash aggregation ([[StructExtreme]], which plans an
-    * `ObjectHashAggregate` where `min`/`max` of a struct would sort every
-    * row) folds the series into per-grid-cell
-    * first/last/exact-hit rows (cell j = floor((t-s0)/interval), clamped to
-    * [-1, n+1]), and one [[GridSweep]] pass over that grid-bounded frame
-    * (at most n + 3 cells) emits the grid. For each grid instant g_k:
+  /** The core of every sampling form: `valCol` read as a double, or (None)
+    * every non-key column held; interpolated or held, or (`empty`) exact
+    * hits only. `static`: the bounds as epoch micros when the caller
+    * already holds them (the TQL compiler's TIMESTAMP() literals); None
+    * folds them from `start`/`end`.
+    *
+    * The data-side work is fully distributed: one hash aggregation
+    * ([[StructExtreme]], which plans an `ObjectHashAggregate` where
+    * `min`/`max` of a struct would sort every row) folds each series into
+    * per-grid-cell first/last/exact-hit rows (cell j = floor((t-s0)/interval),
+    * clamped to [-1, n+1]), and one [[GridSweep]] pass per series over that
+    * grid-bounded frame (at most n + 3 cells) emits the grid. For each grid
+    * instant g_k:
     *   prev(g_k) = exact hit at g_k, else last row of the latest non-empty
     *               cell <= k-1  (== latest row with t <= g_k);
     *   next(g_k) = first row of the earliest non-empty cell >= k
     *               (== earliest row with t >= g_k, cell k starting at g_k).
     * The clamp is exact: cell -1's last row is the last row before g_0 and
     * cell n+1's first row the first row after g_n, and neither cell offers
-    * anything else a grid instant reads. The cell aggregate is the plan's
-    * only exchange; the cells reach the sweep through a no-shuffle
+    * anything else a grid instant reads. Unkeyed, the cell aggregate is the
+    * plan's only exchange; the cells reach the sweep through a no-shuffle
     * `coalesce(1)`, so over a source that reports `SinglePartition` (a
     * one-partition catalog container) the whole read is one job with no
-    * exchange. */
-  private def sampleSmall(df: DataFrame, tsCol: String, pay: Column,
-                          mode: GridSweep.Mode, names: Seq[String], s0Us: Long, n: Long,
-                          intervalUs: Long): DataFrame = {
+    * exchange. Keyed, the sweep clusters the cells on the keys. */
+  private[graft] def sample(df: DataFrame, tsCol: String, valCol: Option[String],
+                            start: Column, end: Column, intervalUs: Long,
+                            keys: Seq[String], static: Option[(Long, Long)],
+                            empty: Boolean = false): DataFrame = {
+    require(intervalUs > 0, "TIME_SAMPLING interval must be positive")
     val t = usec(col(tsCol))
+    val (pay, names) = valCol match {
+      case Some(v) => (struct(t.as("t_us"), col(v).cast("double").as("v")), Seq(v))
+      case None =>
+        val held = df.columns.filterNot(c => c == tsCol || keys.contains(c)).toSeq
+        (struct((t.as("t_us") +: held.map(col)): _*), held)
+    }
+    val mode =
+      if (empty) GridSweep.Empty else if (valCol.isDefined) GridSweep.Interpolate else GridSweep.Hold
+    val (s0Us, e0Us) = static.getOrElse((staticUs(df.sparkSession, start), staticUs(df.sparkSession, end)))
+    // start later than end excludes every row (TimeSeries.java:495): n < 0
+    // is an empty grid, not a one-point one
+    val n = Math.floorDiv(e0Us - s0Us, intervalUs)
+    val keyCols = keys.map(col)
     val j = floor((t - lit(s0Us)) / lit(intervalUs.toDouble)).cast("long")
     val cells = df
-      .select(when(j < -1L, -1L).when(j > n + 1, n + 1).otherwise(j).as("__j"), pay.as("pay"),
-        when(pmod(t - lit(s0Us), lit(intervalUs)) === 0, pay).as("__hit"))
-      .groupBy("__j").agg(
+      .select((keyCols :+ when(j < -1L, -1L).when(j > n + 1, n + 1).otherwise(j).as("__j") :+
+        pay.as("pay") :+ when(pmod(t - lit(s0Us), lit(intervalUs)) === 0, pay).as("__hit")): _*)
+      .groupBy((keyCols :+ col("__j")): _*).agg(
         StructExtreme.of("pay", greatest = false).as("__first"),
         StructExtreme.of("pay", greatest = true).as("__last"),
         StructExtreme.of("__hit", greatest = true).as("__exact"))
-    GridSweep(cells, mode, s0Us, intervalUs, n, names)
+    // the unkeyed sweep already emits row-key order, so the plan drops this sort
+    GridSweep(cells, mode, s0Us, intervalUs, n, names, keys.size).orderBy((keyCols :+ col("ts_ms")): _*)
   }
 
-  /** Unkeyed TIME_SAMPLING, scaled out: the series is split into coarse time
-    * chunks (256 grid intervals each), the bracketing window runs per chunk,
-    * and each chunk is seeded with two synthetic anchor rows — the last data
-    * row of any earlier chunk and the first data row of any later chunk —
-    * computed in a second pass over the tiny one-row-per-chunk frame. The
-    * per-row results are bit-identical to the single-window formulation
-    * (anchor rows reproduce exactly the neighbor each grid point would have
-    * seen), but the heavy window now partitions by chunk. */
-  private[graft] def timeSamplingChunked(df: DataFrame, tsCol: String, valCol: String,
-                                         start: Column, end: Column,
-                                         intervalUs: Long): DataFrame =
-    sampleChunked(df, tsCol, interpPay(tsCol, valCol), interpEmit(valCol),
-      start, end, intervalUs)
-
-  private def sampleChunked(df: DataFrame, tsCol: String, pay: Column,
-                            emit: SampleEmit, start: Column, end: Column,
-                            intervalUs: Long): DataFrame = {
-    val spark = df.sparkSession
-    val chunkUs = intervalUs * ChunkPoints
-    def chunkOf(t: Column): Column = (t / lit(chunkUs.toDouble)).cast("long")
-
-    val data = df.select(usec(col(tsCol)).as("t_us"),
-      pay.as("pay"), lit(0).as("is_grid"))
-    val payT = data.schema("pay").dataType
-    // distributed grid generation: outer explode enumerates chunks (bounded
-    // array), repartition spreads them, inner explode emits ≤256 points each
-    val bounds = spark.range(1).select(usec(start).as("s_us"), usec(end).as("e_us"))
-      .select(col("s_us"),
-        floor((col("e_us") - col("s_us")) / lit(intervalUs.toDouble)).cast("long").as("n_pts"))
-    val grid = bounds
-      .select(col("s_us"), col("n_pts"),
-        explode(sequence(lit(0L),
-          floor(col("n_pts") / lit(ChunkPoints.toDouble)).cast("long"))).as("ci"))
-      .repartition(col("ci"))
-      .select(col("s_us"),
-        explode(sequence(col("ci") * ChunkPoints,
-          least(col("ci") * ChunkPoints + (ChunkPoints - 1), col("n_pts")))).as("k"))
-      .select((col("s_us") + col("k") * intervalUs).as("t_us"),
-        lit(null).cast(payT).as("pay"), lit(1).as("is_grid"))
-
-    val all = data.unionByName(grid).withColumn("__chunk", chunkOf(col("t_us")))
-
-    // pass 2 input: one row per chunk — last/first data row inside the chunk
-    // (struct min/max = lexicographic on (t_us, rest): first/last by time,
-    // deterministic tie-break by the remaining payload fields)
-    val perChunk = all.filter(col("is_grid") === 0)
-      .groupBy("__chunk")
-      .agg(max(col("pay")).as("__lastRow"),
-        min(col("pay")).as("__firstRow"))
-    val chunkFrame = all.select("__chunk").distinct()
-      .join(perChunk, Seq("__chunk"), "left")
-    // the stitch frame is one row per 256 grid points — sequential by
-    // design (constant partition key keeps the tiny window off the
-    // unpartitioned-window path)
-    val wPrevC = Window.partitionBy(pmod(col("__chunk"), lit(1))).orderBy(col("__chunk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wNextC = Window.partitionBy(pmod(col("__chunk"), lit(1))).orderBy(col("__chunk"))
-      .rowsBetween(1, Window.unboundedFollowing)
-    val anchors = chunkFrame.select(col("__chunk"),
-        last(col("__lastRow"), ignoreNulls = true).over(wPrevC).as("__prevA"),
-        first(col("__firstRow"), ignoreNulls = true).over(wNextC).as("__nextA"))
-      .select(col("__chunk"),
-        explode(array(col("__prevA"), col("__nextA"))).as("__a"))
-      .filter(col("__a").isNotNull)
-      .select(col("__a").getField("t_us").as("t_us"),
-        col("__a").as("pay"), lit(0).as("is_grid"), col("__chunk"))
-
-    // anchor timestamps lie outside their target chunk's range, so they sort
-    // strictly before/after every in-chunk row — the per-chunk window sees
-    // exactly the rows the global window would
-    val seeded = all.unionByName(anchors)
-    val wAsc = Window.partitionBy("__chunk")
-      .orderBy(col("t_us").asc, col("is_grid").asc, col("pay").asc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wDesc = Window.partitionBy("__chunk")
-      .orderBy(col("t_us").desc, col("is_grid").asc, col("pay").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    bracket(seeded, wAsc, wDesc)
-      .select(emit(col("t_us"), col("p"), col("nx")): _*)
-  }
-
-  /** Shared bracketing pass: previous/next data payload for every grid row. */
-  private def bracket(all: DataFrame,
-                      wAsc: org.apache.spark.sql.expressions.WindowSpec,
-                      wDesc: org.apache.spark.sql.expressions.WindowSpec): DataFrame = {
-    val dataPay = when(col("is_grid") === 0, col("pay"))
-    all
-      .withColumn("p", last(dataPay, ignoreNulls = true).over(wAsc))
-      .withColumn("nx", last(dataPay, ignoreNulls = true).over(wDesc))
-      .filter(col("is_grid") === 1 && col("p").isNotNull && col("nx").isNotNull)
+  /** A literal timestamp bound as epoch micros. Resolution and constant
+    * folding run driver-side on a one-row plan — no job is executed. A
+    * bound that does not fold to a non-null literal is rejected. */
+  private def staticUs(spark: org.apache.spark.sql.SparkSession, c: Column): Long = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Literal => CLit}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    (spark.range(1).select(unix_micros(c.cast("timestamp"))).queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        l.data.headOption.collect { case r if !r.isNullAt(0) => r.getLong(0) }
+      case Project(Seq(Alias(CLit(v: Long, _), _)), _) => Some(v)
+      case _ => None
+    }).getOrElse(throw new IllegalArgumentException(
+      s"TIME_SAMPLING bounds must be non-null literal timestamps, got $c"))
   }
 
   /** TIME_WINDOW_AGG: tumbling-window aggregation (window start aligned to

@@ -83,45 +83,32 @@ class TimeSeriesOpsSpec extends SparkTestBase {
     assert(out.map(_._3).toSeq == Seq(Some(5L), None, Some(15L)))
   }
 
-  test("timeSampling small-path parity with chunked path, and path selection") {
-    // irregular series across ~700 grid points incl. exact hits and gaps
-    val rnd = new scala.util.Random(7)
-    val rows = (0 until 900).map(i =>
-      (i * 3L + (if (rnd.nextBoolean()) 0L else rnd.nextInt(2) + 1L)) -> rnd.nextDouble())
-      .distinctBy(_._1)
-    val df = series(rows: _*)
-    val small = T.timeSampling(df, "ts", "value", at(10), at(2500), intervalUs = 4000000L)
-      .orderBy("ts_ms").select("ts_ms", "value").as[(Long, Double)].collect()
-    val chunked = T.timeSamplingChunked(df, "ts", "value", at(10), at(2500), 4000000L)
-      .orderBy("ts_ms").select("ts_ms", "value").as[(Long, Double)].collect()
-    assert(small.length == chunked.length && small.nonEmpty)
-    small.zip(chunked).foreach { case ((t1, v1), (t2, v2)) =>
-      assert(t1 == t2 && math.abs(v1 - v2) < 1e-9, s"mismatch at $t1/$t2: $v1 vs $v2")
-    }
-    // literal bounds with a small grid must select the grid-bounded path
-    // (no __chunk machinery), and its plan must have no unpartitioned window
-    val plan = T.timeSampling(df, "ts", "value", at(10), at(2500), 4000000L)
-      .queryExecution.optimizedPlan.toString
-    assert(!plan.contains("__chunk"), "small grid should not take the chunked path")
-    // non-literal bounds must fall back to the chunked path
-    val dynPlan = T.timeSampling(df, "ts", "value",
-        timestamp_seconds(lit(1704067210L) + (rand() * 0).cast("long")), at(2500), 4000000L)
-      .queryExecution.optimizedPlan.toString
-    assert(dynPlan.contains("__chunk"), "non-literal bounds should take the chunked path")
+  /** GridSweep nodes and Window nodes in the executed plan. */
+  private def sweepsAndWindows(df: org.apache.spark.sql.DataFrame): (Int, Int) = {
+    val plan = df.queryExecution.executedPlan.toString
+    (plan.split("GridSweep", -1).length - 1, plan.split("Window", -1).length - 1)
   }
 
-  test("GroupByRange small-grid fill uses the window path (no __chunk)") {
+  test("timeSampling: one GridSweep at n = 10,001, literal bounds only") {
+    val df = series(0L -> 1.0, 7L -> 2.0, 40003L -> 3.0)
+    // the grid size the chunked plan used to take over from the sweep
+    val sampled = T.timeSampling(df, "ts", "value", at(0), at(40004), intervalUs = 4000000L)
+    assert(sweepsAndWindows(sampled) == (1, 0), sampled.queryExecution.executedPlan.toString)
+    assert(sampled.count() == 10001)
+    // non-literal bounds are rejected before any job
+    intercept[IllegalArgumentException](T.timeSampling(df, "ts", "value",
+      timestamp_seconds(lit(1704067210L) + (rand() * 0).cast("long")), at(2500), 4000000L))
+  }
+
+  test("GroupByRange fill: one GridSweep, no Window, at n = 6 and 10,001") {
     val base = 1704067200000L
     val df = series(10L -> 2.0, 44L -> 8.0)
-    val plan = GroupByRange(df, "ts", base, base + 60000L, 10000L,
+    val small = GroupByRange(df, "ts", base, base + 60000L, 10000L,
       Seq(avg(col("value")).as("v")), GroupByRange.FillLinear)
-      .queryExecution.optimizedPlan.toString
-    assert(!plan.contains("__chunk"))
-    // a >SmallGrid bucket count still routes to the chunked path
-    val bigPlan = GroupByRange(df, "ts", base, base + 20000L * 10001L, 20000L,
+    assert(sweepsAndWindows(small) == (1, 0), small.queryExecution.executedPlan.toString)
+    val big = GroupByRange(df, "ts", base, base + 20000L * 10001L, 20000L,
       Seq(avg(col("value")).as("v")), GroupByRange.FillPrevious)
-      .queryExecution.optimizedPlan.toString
-    assert(bigPlan.contains("__chunk"))
+    assert(sweepsAndWindows(big) == (1, 0), big.queryExecution.executedPlan.toString)
   }
 
   test("timeAvg: trapezoid-equivalent weighting") {
